@@ -12,7 +12,8 @@ The helper closure covers OPS-MODULE helpers (common/ext_llm/
 ext_pipeline/graphs attributes named in _SHARED_HELPERS). Engine planes
 that entries certify THROUGH but never inline (warehouse:
 materialize.py + fsutil.py for the sink entries; multimodal:
-multimodal.py for the ext-multimodal-* entries) are pinned separately
+multimodal.py for the ext-multimodal-* entries; streaming:
+streaming/jobs.py for stream-dedup-near-cert) are pinned separately
 at FILE level into scripts/plane_manifest.json: a plane edit re-windows
 every green entry certifying through it, closing the blind spot where a
 behavioral change there could coast on rows earned by the old code
@@ -278,6 +279,11 @@ def green_entries() -> set[str]:
 #   consciously re-certified — which is the correct cost of changing
 #   the semantics floor under 286 certifications. Pin bootstrapped at
 #   round-12 HEAD (the standing caveat: governs edits from r13 on).
+# - streaming: stream-dedup-near-cert replays the corpus through
+#   foreach_batch_near_dedup in streaming/jobs.py, whose execution is
+#   not in the entry hash. Pin bootstrapped at the HEAD of the change
+#   that added the once-per-micro-batch sink wrapper, after that change's
+#   own edits to the module (the near-dedup sink itself was left as is).
 # The guard test derives each plane's affected entries dynamically
 # (tests/test_corpus_order.py::test_planes_unchanged_or_windowed).
 PLANES: dict[str, tuple[str, ...]] = {
@@ -290,6 +296,7 @@ PLANES: dict[str, tuple[str, ...]] = {
         "dbtwiz_spark/catalog.py",
         "dbtwiz_spark/session.py",
     ),
+    "streaming": ("dbtwiz_spark/streaming/jobs.py",),
 }
 
 

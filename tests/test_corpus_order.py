@@ -174,13 +174,16 @@ _PLANE_AFFECTED = {
     # every entry loads its tables through Catalog/views and runs under
     # the session factory's confs — a core edit invalidates everything
     "core": lambda mod, src: True,
+    # stream-dedup-near-cert replays through the near-dedup sink
+    "streaming": lambda mod, src: "dbtwiz_spark.streaming" in src,
 }
 
 
 def test_planes_unchanged_or_windowed():
     """Entries that certify THROUGH an engine plane (sink entries and
-    stream-dedup-near-cert through materialize.Warehouse + fsutil; the
-    ext-multimodal-* entries through multimodal.py) call code whose
+    stream-dedup-near-cert through materialize.Warehouse + fsutil and
+    through the streaming/jobs.py near-dedup sink; the ext-multimodal-*
+    entries through multimodal.py) call code whose
     source never appears in their entry hash, so a behavioral plane edit
     would coast on green rows earned by the old code — the round-2
     win-percent failure mode, one indirection deeper. The plane manifest
@@ -190,7 +193,8 @@ def test_planes_unchanged_or_windowed():
 
     Bootstrap caveat (stated, not hidden): each pin is first generated
     at the HEAD of the round that introduces it (warehouse + multimodal:
-    round 11), AFTER that round's own edits to the plane — so the guard
+    round 11; streaming: the change that added the once-per-micro-batch
+    sink wrapper), AFTER that round's own edits to the plane — so the guard
     governs edits from the next round on, and the introducing round's
     edits are covered by the plane's direct test suite (staging-sweep
     property tests, the materialize suite, the decode round-trip tests)

@@ -3,6 +3,8 @@ results over the same events (the engine's streaming/batch contract)."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,10 +12,13 @@ from dbtwiz_spark.catalog import Catalog
 from dbtwiz_spark.materialize import Warehouse
 from dbtwiz_spark.streaming import (
     events_stream,
+    foreach_batch_apply_changes,
+    foreach_batch_merge,
     foreach_batch_overwrite,
     stateful_dedup_stream,
     windowed_counts_stream,
 )
+from dbtwiz_spark.streaming.jobs import windowed_topk_stream
 from tests.conftest import SF_DIR
 
 
@@ -878,3 +883,96 @@ def test_rate_limit_stream_restart_recovers_custom_state(spark, tmp_path):
         f"restart diverged for {sum(1 for u in want if got.get(u) != want[u])} "
         f"of {len(want)} users — custom state did not recover"
     )
+
+
+_T0, _T1 = datetime(2024, 1, 1, 3), datetime(2024, 1, 2, 3)
+
+# Per wrapped sink: (make the sink from a warehouse, the tables it writes,
+# batch rows, batch schema, the column a counting UDF wraps).
+_ONCE_CASES = {
+    "overwrite": (
+        lambda spark, wh: foreach_batch_overwrite(wh, "t"),
+        ["t"],
+        [(1, _T0), (2, _T1), (3, _T1)],
+        "k BIGINT, ts TIMESTAMP",
+        "k",
+    ),
+    "merge": (
+        lambda spark, wh: foreach_batch_merge(wh, "t", "k"),
+        ["t"],
+        [(1, "a"), (2, "b"), (3, "c")],
+        "k BIGINT, v STRING",
+        "k",
+    ),
+    "apply_changes": (
+        lambda spark, wh: foreach_batch_apply_changes(wh, "t", "k"),
+        ["t"],
+        [("I", 1, 1, "a"), ("U", 2, 1, "a2"), ("I", 1, 2, "b")],
+        "op STRING, seq INT, k BIGINT, v STRING",
+        "k",
+    ),
+    "windowed_topk": (
+        lambda spark, wh: windowed_topk_stream(
+            spark.createDataFrame([], "ts TIMESTAMP, event_type STRING"), wh
+        )[1],
+        ["stream_topk_counts", "stream_topk"],
+        [(_T0, "click", 3), (_T0, "view", 2), (_T1, "click", 1)],
+        "win_start TIMESTAMP, event_type STRING, n_events BIGINT",
+        "n_events",
+    ),
+}
+
+
+def _counting_batch(spark, rows, schema, col):
+    """``rows`` as a batch whose ``col`` passes through a Python UDF that
+    counts its evaluations in an accumulator — a stand-in for the
+    stateful plan a foreachBatch DataFrame re-runs on every action."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        acc.add(1)
+        return v
+
+    df = spark.createDataFrame(rows, schema)
+    return df.withColumn(col, F.udf(tick, df.schema[col].dataType)(col)), acc
+
+
+@pytest.mark.parametrize("name", list(_ONCE_CASES))
+def test_sink_computes_each_batch_once(spark, tmp_path, name):
+    """Once-per-micro-batch contract: a sink computes every input row
+    exactly once per call, both when it creates its table(s) and when it
+    updates them (merge reads its updates twice, the top-k sink reuses
+    the batch for its touched windows)."""
+    make, _tables, rows, schema, col = _ONCE_CASES[name]
+    sink = make(spark, Warehouse(spark, str(tmp_path / "wh")))
+    for batch_id in range(2):
+        batch, acc = _counting_batch(spark, rows, schema, col)
+        sink(batch, batch_id)
+        assert acc.value == len(rows), (batch_id, acc.value)
+
+
+@pytest.mark.parametrize("name", list(_ONCE_CASES))
+def test_sink_skips_empty_batch(spark, tmp_path, name):
+    """An empty micro-batch is a no-op: no table is created."""
+    make, tables, _rows, schema, _col = _ONCE_CASES[name]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    make(spark, wh)(spark.createDataFrame([], schema), 0)
+    assert not [t for t in tables if wh.exists(t)]
+
+
+@pytest.mark.parametrize("name", list(_ONCE_CASES))
+def test_sink_unpersists_when_body_raises(spark, tmp_path, monkeypatch, name):
+    """A sink body that raises leaves no persisted batch behind."""
+    make, _tables, rows, schema, _col = _ONCE_CASES[name]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("sink body failed")
+
+    for method in ("write_table", "insert_overwrite", "merge", "apply_changes"):
+        monkeypatch.setattr(wh, method, fail)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="sink body failed"):
+        make(spark, wh)(spark.createDataFrame(rows, schema), 0)
+    assert set(jsc.getPersistentRDDs().keys()) == before
