@@ -1848,7 +1848,7 @@ def agg_gini_concentration(spark, sf_dir):
     from dbtwiz_spark.ops.common import parallel_rank
 
     keys = [F.col("r"), F.col("o_custkey")]
-    ranked = parallel_rank(rev, keys).select(
+    ranked = parallel_rank(rev, keys, sf_dir, "agg-gini-concentration").select(
         "r", F.col("_rank").alias("i"), "_n"
     )
     s = ranked.agg(
@@ -2306,7 +2306,9 @@ def agg_ks_test(spark, sf_dir):
             F.count(F.when(F.col("event_type") == "view", 1)).alias("c2"),
         )
     )
-    ps = parallel_prefix_sum(g, [F.col("value")], ["c1", "c2"])
+    ps = parallel_prefix_sum(
+        g, [F.col("value")], ["c1", "c2"], sf_dir, "agg-ks-test"
+    )
     # sample sizes = the FINAL prefix values (prefix sums of nonnegative
     # counts are nondecreasing, so max = last = total): one tiny agg over
     # the persisted prefix table instead of a second full events-scan +
@@ -2470,7 +2472,7 @@ def agg_survival_km(spark, sf_dir):
     tbl = lt.groupBy("t").agg(
         F.count("*").alias("a"), F.sum("death").cast("long").alias("d")
     )
-    cum = parallel_prefix_sum(tbl, [F.col("t")], ["a"])
+    cum = parallel_prefix_sum(tbl, [F.col("t")], ["a"], sf_dir, "agg-survival-km")
     n_total = cum.agg(F.max("_cum_a").cast("long").alias("total"))
     dth = (
         cum.crossJoin(F.broadcast(n_total))
@@ -2924,7 +2926,9 @@ def agg_spearman_corr(spark, sf_dir):
 
     def ranks(col):
         g = li.groupBy(col).agg(F.count("*").alias("c"))
-        cum = parallel_prefix_sum(g, [F.col(col)], ["c"])
+        cum = parallel_prefix_sum(
+            g, [F.col(col)], ["c"], sf_dir, f"agg-spearman-corr:{col}"
+        )
         return cum.select(
             col,
             (2 * F.col("_cum_c") - F.col("c") + 1).alias(f"dr{col}"),
@@ -3316,13 +3320,15 @@ def agg_rfm_segmentation(spark, sf_dir):
         (F.sum(F.col("o_totalprice").cast(DEC)) * 100).cast("long").alias("monc"),
     )
 
-    # each axis ranks the FILE-BACKED base aggregate independently (the
-    # three rank tables then join back on the key): chaining rank calls
-    # would feed a persisted plan into _plan_sig, whose InMemoryRelation
-    # canonicalizes scale-independently with no input files — the
-    # cross-scale memo collision class (see _plan_sig)
+    # each axis ranks the base aggregate independently (the three rank
+    # tables then join back on the key); the axis is part of the kind
     def quint(dim, out):
-        r = parallel_rank(cust, [F.col(dim), F.col("o_custkey")])
+        r = parallel_rank(
+            cust,
+            [F.col(dim), F.col("o_custkey")],
+            sf_dir,
+            f"agg-rfm-segmentation:{dim}",
+        )
         return r.select(
             "o_custkey",
             (F.expr("div((_rank - 1) * 5, _n)") + 1).cast("long").alias(out),
@@ -3629,7 +3635,10 @@ def agg_pareto_share(spark, sf_dir):
         .alias("revc")
     )
     rk = parallel_rank(
-        cust.withColumn("_neg", -F.col("revc")), ["_neg", "o_custkey"]
+        cust.withColumn("_neg", -F.col("revc")),
+        ["_neg", "o_custkey"],
+        sf_dir,
+        "agg-pareto-share",
     )
     tot = rk.agg(F.sum("revc").cast("long").alias("tot"))
     th = F.explode(F.array(*[F.lit(p) for p in (1, 5, 10, 20, 50)])).alias("p")

@@ -18,10 +18,12 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-from dbtwiz_spark.catalog import Catalog
+from dbtwiz_spark.catalog import TABLES, Catalog
 
 DEC = "decimal(28,6)"
 DEC_SQL = "DECIMAL(28,6)"
@@ -121,78 +123,84 @@ def hkey_sql(expr: str) -> str:
     return f"((({expr}) % {M31}) * {KNUTH}) % {M32}"
 
 
-# Memoized persisted rank inputs, keyed on (session object, analyzed input
-# plan, key exprs, n_parts) — the graphs._ARTIFACTS pattern. Without the
-# memo every parallel_rank call (corpus sweeps, plan audits, bench
-# best-of-3 all re-invoke win-percent / agg-gini-concentration) persisted
-# a fresh copy for the session lifetime, accumulating executor storage.
-_RANK_CACHE: dict[tuple, object] = {}
+# The one session-lifetime artifact cache of the ops package: derived
+# tables (edge lists, signature tables, ANN indexes, rank outputs) built
+# once per (session, sf_dir, kind) and served to every later query,
+# deliberately trading executor storage for reuse within a sweep. Every
+# op that reaches it is a (spark, sf_dir) function, so the explicit key
+# fixes the artifact's input; ``kind`` names the call site and its
+# parameters (tests/test_engine_basics.py pins one builder per literal
+# kind). Values are (generation, artifact) pairs — see cached_artifact.
+_ARTIFACT_CACHE: dict[tuple, tuple] = {}
 
 
-# Registry of every session-lifetime memo store in the ops package
-# (_RANK_CACHE here; graphs._ARTIFACTS; ext_llm._ARTIFACTS;
-# ext_pipeline._ARTIFACTS). Each maps a (session, ...) key to a PERSISTED
-# DataFrame, deliberately trading executor storage for reuse within a
-# sweep — but a long-lived session sweeping many scales accumulates
-# copies without bound (a 54-entry single-session sweep OOM'd a
-# 1 GiB-driver judge session in round 7). clear_session_memos() is the
-# eviction hook: call it between corpus sweeps (testing.run_all does so
-# by default; Catalog.clear_memos() exposes it to services) to unpersist
-# and drop everything, bounding storage at one-sweep working set.
-_MEMO_STORES: list[dict] = [_RANK_CACHE]
+def _generation(sf_dir: str) -> tuple:
+    """(size, mtime_ns) of each base-table file under ``sf_dir``. Size
+    alone misses a same-length rewrite (one flipped value), so mtime_ns
+    rides along; a stat failure (remote fs, missing table) degrades that
+    table to (None, None)."""
+    out = []
+    for t in TABLES:
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+            out.append((st.st_size, st.st_mtime_ns))
+        except OSError:
+            out.append((None, None))
+    return tuple(out)
 
 
-def register_memo_store(store: dict) -> dict:
-    """Enroll a module's memo dict in the global eviction hook."""
-    # identity, not ==: two EMPTY stores compare equal, and `in` would
-    # silently skip enrolling the second one
-    if not any(s is store for s in _MEMO_STORES):
-        _MEMO_STORES.append(store)
-    return store
+def _unpersist(value) -> None:
+    # a value is a DataFrame or a tuple of them (ivf_index's assignments,
+    # centroids and centroid row): release EVERY element — unpersisting
+    # only one leaked the corpus-sized IVF assignments per sweep
+    for df in value if isinstance(value, tuple) else (value,):
+        try:
+            df.unpersist(False)
+        except Exception:
+            pass  # stopped session — nothing to free
 
 
-def memo_artifact(store: dict, spark, sf_dir: str, kind: str, build):
-    """Session-lifetime memo for persisted derived tables (edge lists,
-    degree tables, tf-idf stats), parameterized on the owning module's
-    ``store`` dict — ONE implementation behind the graphs/ext_pipeline
-    ``_artifact``/``_pipe_artifact`` wrappers, which existed as verbatim
-    twins since their extraction (round-12 consolidation; each module
-    keeps its own store so eviction diagnostics stay per-module).
+def cached_artifact(spark, sf_dir: str, kind: str, build):
+    """Serve ``build()``'s artifact, built once per (session, sf_dir,
+    kind). ``build`` returns the artifact exactly as it is stored: it
+    calls ``.persist()`` itself, or returns an already materialized
+    ``_truncate`` result (persisting that too would store every table
+    twice — checkpoint blocks AND a columnar copy).
 
     Keyed on the session OBJECT, never ``id(spark)``: a GC'd session's
     address can be reused by a new session, which would then receive
-    cached plans bound to the stopped one. The store must be enrolled in
-    ``register_memo_store`` by its owner so ``clear_session_memos``
-    evicts it."""
-    key = (spark, sf_dir, kind)
-    df = store.get(key)
-    if df is None:
-        df = build().persist()
-        store[key] = df
-    return df
+    plans bound to the stopped one.
 
-
-def memo_artifact_raw(store: dict, spark, sf_dir: str, kind: str, build):
-    """Memo-only ``memo_artifact`` variant for builders whose result is
-    ALREADY materialized and lineage-truncated (``_truncate``): stacking
-    ``persist()`` on top would store every table twice — checkpoint
-    blocks AND a columnar cache copy that fills on first use (review
-    find on the HITS half-steps: double block-manager footprint per
-    (session, scale)). Same session-object keying; eviction drops the
-    dict ref and the checkpoint blocks free on GC."""
+    Every lookup re-checks the generation of ``sf_dir``'s base tables
+    (``_generation``). A changed generation means the files were
+    rewritten in place, and the superseded artifact is UNPERSISTED
+    before the rebuild: Spark's CacheManager dedupes ``persist()`` by
+    plan, so a still-cached stale generation would be resurrected under
+    the rebuilt DataFrame (measured: an in-place pyarrow rewrite kept
+    serving the old 5 rows through a brand-new read until the old
+    persist was dropped)."""
     key = (spark, sf_dir, kind)
-    df = store.get(key)
-    if df is None:
-        df = build()
-        store[key] = df
-    return df
+    gen = _generation(sf_dir)
+    hit = _ARTIFACT_CACHE.get(key)
+    if hit is not None:
+        if hit[0] == gen:
+            return hit[1]
+        del _ARTIFACT_CACHE[key]
+        _unpersist(hit[1])
+    value = build()
+    _ARTIFACT_CACHE[key] = (gen, value)
+    return value
 
 
 def clear_session_memos() -> int:
-    """Unpersist and drop every memoized artifact in every registered
-    store; returns the number of entries dropped. Safe to call with jobs
-    finished (unpersist is non-blocking); the next operator invocation
-    simply rebuilds its artifacts.
+    """Unpersist and drop every cached artifact; returns the number of
+    entries dropped. A long-lived session sweeping many scales otherwise
+    accumulates copies without bound (a 54-entry single-session sweep
+    OOM'd a 1 GiB-driver judge session in round 7): call this between
+    corpus sweeps (testing.run_all does so by default; Catalog.clear_memos()
+    exposes it to services) to bound storage at one sweep's working set.
+    Safe to call with jobs finished (unpersist is non-blocking); the next
+    operator invocation simply rebuilds its artifacts.
 
     A LAZY DataFrame built before the clear stays CORRECT if executed
     after it — just slower (the artifact subtree recomputes). The one
@@ -215,29 +223,10 @@ def clear_session_memos() -> int:
             active.conf.set("spark.sql.exchange.reuse", "true")
         except Exception:
             pass  # stopped session — nothing left to protect
-    dropped = 0
-    for store in _MEMO_STORES:
-        for val in store.values():
-            # Store values come in three shapes: bare DataFrames
-            # (artifact stores), (stats, df) generation pairs
-            # (_memo_generation), and multi-DataFrame tuples (ivf_index's
-            # (assignments, centroids, cents_row)). Unpersist EVERY
-            # element that can be — unpersisting only the last leaked the
-            # corpus-sized IVF assignments and the centroid table per
-            # sweep, exactly the cross-sweep storage accumulation this
-            # hook exists to prevent (round-16 ADVICE). Non-DataFrame
-            # elements (generation stats) have no unpersist and are
-            # skipped.
-            items = val if isinstance(val, tuple) else (val,)
-            for item in items:
-                unpersist = getattr(item, "unpersist", None)
-                if unpersist is not None:
-                    try:
-                        unpersist(False)
-                    except Exception:
-                        pass  # stopped session — nothing to free
-            dropped += 1
-        store.clear()
+    dropped = len(_ARTIFACT_CACHE)
+    for _gen, value in _ARTIFACT_CACHE.values():
+        _unpersist(value)
+    _ARTIFACT_CACHE.clear()
     return dropped
 
 
@@ -292,212 +281,7 @@ def _truncate(df):
     return df.checkpoint(eager=True)
 
 
-def _plan_sig(df, keys, *extra) -> tuple:
-    """Memo key for a (session, input plan, key exprs, ...) combination,
-    returned as a ``(base, stats)`` PAIR: ``base`` identifies the plan
-    (session, canonicalized plan, file uris, key exprs, extras) and
-    ``stats`` carries each backing file's (size, mtime_ns) — the
-    GENERATION of those uris. Consumers key their memo on ``base`` and
-    compare ``stats`` on every hit (``_memo_generation``): same base +
-    same stats is a safe reuse; same base + different stats means the
-    files were overwritten in place, and the superseded artifact must be
-    EVICTED, not shadowed — Spark's CacheManager dedupes ``persist()``
-    by canonicalized plan, so a still-cached stale generation would be
-    silently resurrected under the rebuilt DataFrame (measured: an
-    in-place pyarrow rewrite of a fixed-name parquet kept serving the
-    old 5 rows through a brand-new read until the old persist was
-    dropped).
-
-    The canonicalized plan normalizes exprIds (two independently built but
-    identical plans hit the same slot); serialized via toJSON(), NOT
-    toString() — toString truncates at spark.sql.debug.maxToStringFields
-    (25) fields, so wide plans differing only past the cutoff would
-    COLLIDE and silently serve another input's cached rows. Canonicalization
-    ALSO erases file-source locations (measured: identical JSON for the
-    same query over sf0.001 and sf0.01 dirs — a cross-scale sweep then
-    served the wrong scale's cached ranks), so the input file set is
-    folded in explicitly.
-
-    A plan containing an InMemoryRelation (a persisted/primed input)
-    swallows its file scans (empty inputFiles) and canonicalizes
-    scale-independently, so two scale dirs' plans become
-    indistinguishable (measured: a parallel_rank output fed into a
-    second parallel_rank collided across sf dirs and served the wrong
-    scale's 150-row rank table). Refusing memoization outright is NOT
-    an option: a primed Catalog (``views(...).prime()`` — the bench and
-    every long-lived deployment) puts an InMemoryRelation under EVERY
-    plan, which disabled the memo wholesale (measured: win-rolling-corr
-    0.5 s -> 2.5 s at sf0.1) and re-persisted a fresh copy per call —
-    the exact leak the memo exists to prevent. Instead the provenance
-    the canonicalized JSON erases is recovered from the OPTIMIZED plan
-    string, which prints each InMemoryRelation's cached build subtree:
-    the file: URIs distinguish scales, and the plan-node name sequence
-    distinguishes same-schema cached artifacts (e.g. two edge lists)
-    whose canonicalized leaves would otherwise collide. Both are stable
-    across invocations (no exprIds). A cached plan with NO recoverable
-    file provenance falls back to a unique token — correctness over
-    reuse. File-less but self-describing leaves (range, LocalRelation)
-    still memoize: their parameters survive canonicalization.
-
-    The stats half (round-12 hardening, deferred since round 9): size
-    alone is not enough (a same-length rewrite is one flipped value
-    away), so mtime_ns rides along; a stat failure (remote fs, file
-    vanished mid-plan) degrades that file to (None, None) — two
-    unstattable generations then compare equal, exactly the uri-only
-    exposure this closes for every STATTABLE file."""
-    import os as _os
-
-    def _stat(u: str):
-        # Spark's inputFiles()/plan URIs percent-encode spaces and
-        # specials — un-decoded they always stat-fail to (None, None)
-        # and two generations of those files compare EQUAL, silently
-        # reopening the in-place-overwrite hole for exactly those paths
-        # (round-12 ADVICE). urlparse also handles file://host/ forms:
-        # a non-local authority can't be stat'd here, so it degrades to
-        # the documented (None, None) mode instead of stat'ing a wrong
-        # same-named local path.
-        p = u
-        if u.startswith("file:"):
-            from urllib.parse import unquote, urlparse
-
-            parsed = urlparse(u)
-            if parsed.netloc not in ("", "localhost"):
-                return (None, None)
-            p = unquote(parsed.path)
-        try:
-            st = _os.stat(p)
-            return (st.st_size, st.st_mtime_ns)
-        except OSError:
-            return (None, None)
-
-    uris = tuple(sorted(df.inputFiles()))
-    files: object = uris
-    if not uris:
-        # Round-16 fast path: cache substitution happens AFTER analysis
-        # (withCachedData), so the ANALYZED plan's leaves still hold the
-        # original file relations even when every downstream consumer
-        # will read an InMemoryRelation — walking them recovers the real
-        # file provenance directly, without forcing the extra
-        # analyze+optimize pass (~0.1-0.2 s of driver time per memo
-        # lookup) the optimized-plan string recovery below costs. The
-        # string recovery remains as the fallback for inputs whose OWN
-        # plan root is already an InMemoryRelation (e.g. a DataFrame
-        # built directly on a cached LocalRelation).
-        found: list[str] = []
-        unrecovered = False
-        try:
-            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-            for i in range(leaves.size()):
-                leaf = leaves.apply(i)
-                try:
-                    for u in leaf.relation().location().inputFiles():
-                        found.append(u)
-                except Exception:
-                    # A leaf with no file provenance is fine when it is
-                    # SELF-DESCRIBING (its parameters survive
-                    # canonicalization: Range, LocalRelation/OneRowRelation
-                    # literals). Anything else — InMemoryRelation,
-                    # LogicalRDD, a DSv2 relation whose location() is not
-                    # reachable this way — has provenance this fast path
-                    # CANNOT see, and returning early would produce a
-                    # signature missing that leaf entirely: two plans
-                    # differing only in the cached leaf would collide and
-                    # serve each other's ranks (the round-9 failure mode;
-                    # round-16 ADVICE). Mark it and fall through to the
-                    # optimized-plan string recovery below, which prints
-                    # the cached build subtree.
-                    try:
-                        name = str(leaf.nodeName())
-                    except Exception:
-                        name = ""
-                    if name not in ("Range", "LocalRelation", "OneRowRelation"):
-                        unrecovered = True
-        except Exception:
-            found = []
-        if found and not unrecovered:
-            uris = tuple(sorted(set(found)))
-            return (
-                (
-                    df.sparkSession,
-                    df._jdf.queryExecution()
-                    .analyzed()
-                    .canonicalized()
-                    .toJSON(),
-                    uris,
-                    tuple(str(k) for k in keys),
-                    *extra,
-                ),
-                tuple(_stat(u) for u in uris),
-            )
-        # fallback: only the optimized plan reveals the InMemoryRelation
-        # that swallowed the file scan
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        if "InMemoryRelation" in opt:
-            import re as _re
-
-            uris = tuple(sorted(set(_re.findall(r"file:[^\s,\]\)}]+", opt))))
-            if uris:
-                nodes = tuple(_re.findall(r"(?m)^[\s+:|-]*([A-Za-z]+)", opt))
-                # same staleness exposure as the direct-scan path: the
-                # cached build subtree's files can be rewritten in place
-                files = (uris, nodes)
-            else:
-                files = object()
-    base = (
-        df.sparkSession,
-        df._jdf.queryExecution().analyzed().canonicalized().toJSON(),
-        files,
-        tuple(str(k) for k in keys),
-        *extra,
-    )
-    return (base, tuple(_stat(u) for u in uris))
-
-
-def _memo_generation(store: dict, sig: tuple, build):
-    """Serve ``build()``'s persisted result memoized under ``sig``'s base
-    key, evicting a SUPERSEDED GENERATION on stats mismatch (see
-    _plan_sig): the stale DataFrame is unpersisted BEFORE the rebuild so
-    Spark's CacheManager cannot dedupe the new persist() onto the old
-    generation's cached buffers. Store values are (stats, df) pairs;
-    clear_session_memos understands both shapes."""
-    base, stats = sig
-    hit = store.get(base)
-    if hit is not None:
-        if hit[0] == stats:
-            return hit[1]
-        try:
-            hit[1].unpersist(False)
-        except Exception:
-            pass  # stopped session — nothing cached to resurrect
-    df = build().persist()
-    store[base] = (stats, df)
-    return df
-
-
-def _materialize_and_release_local(out, local) -> None:
-    """Fill the ranked/prefixed OUTPUT artifact's cache eagerly and
-    release the range-partitioned ``local`` stage's storage (round 17,
-    r16 verdict §5 watch): keeping BOTH artifacts persisted doubled the
-    steady-state executor-storage footprint of every rank/prefix consumer
-    — the local stage is only needed to pin one physical boundary sample
-    while the output is CONSTRUCTED. Ordering is load-bearing: the
-    count() materializes the output's InMemoryRelation (all columns)
-    while local is still cached, so the output's cached child plan bakes
-    local's single boundary sample; only then is local's storage freed.
-    Recomputation of lost output partitions replays the output's OWN
-    executed physical plan (boundaries live in its shuffle dependencies,
-    they are never re-sampled), so releasing local does not reopen the
-    independently-sampled-exchange hazard. local's memo entry stays: an
-    unpersisted hit is never re-executed while the output artifact
-    serves, and a generation change rebuilds both."""
-    out.count()
-    try:
-        local.unpersist(False)
-    except Exception:
-        pass  # stopped session — nothing to free
-
-
-def parallel_rank(df, keys, n_parts: int = 8):
+def parallel_rank(df, keys, sf_dir: str, kind: str, n_parts: int = 8):
     """Global 1-based row number over a UNIQUE total order, scale-safe.
 
     A bare ``Window.orderBy`` funnels the whole table through one task;
@@ -510,41 +294,41 @@ def parallel_rank(df, keys, n_parts: int = 8):
 
     Returns ``df`` plus ``_rank`` (global row number) and ``_n`` (total
     rows). The key chain MUST be a unique total order or ranks are
-    partition-placement-dependent. TWO memoized persisted stages
-    (round-16): the range-partitioned+locally-ranked ``local`` stage
-    (as before — both the counts and the offset join consume it, and its
-    CACHE IDENTITY is what pins one physical boundary sample for both
-    consumers: with only plan-level sharing, column pruning specializes
-    each branch's projection below the exchange into two DIFFERENT range
+    partition-placement-dependent. ``df`` must be a function of the
+    base tables under ``sf_dir``: the ranked output is a cached artifact
+    under (sf_dir, ``kind``), so ``kind`` names the call site and any
+    parameter that shapes ``df``.
+
+    One build persists the range-partitioned+locally-ranked ``local``
+    stage, persists and counts the WHOLE ranked output, then releases
+    ``local``. The local stage's CACHE IDENTITY is what pins one physical
+    boundary sample for both consumers (the counts and the offset join):
+    with only plan-level sharing, column pruning specializes each
+    branch's projection below the exchange into two DIFFERENT range
     exchanges that sample boundaries independently — measured duplicate/
-    missing ranks at sf0.1), plus the WHOLE ranked output (offset join
-    included), so a consumer execution is one cached scan instead of
-    re-running the counts/offsets chain (3 adaptive stages) every time.
-    Shared by win-percent and agg-gini-concentration; the offset fold is
+    missing ranks at sf0.1. Ordering is load-bearing: the count()
+    materializes the output while local is still cached, so the output's
+    cached plan bakes local's single sample; recomputing lost output
+    partitions replays the output's own shuffle dependencies and never
+    re-samples. Only the output stays cached — ONE corpus-sized artifact
+    per input, and a consumer execution is one cached scan instead of
+    the counts/offsets chain (3 adaptive stages). The offset fold is
     O(P^2) on a handful of elements in one tiny task, never a windowed
-    cumsum (that would be a single-partition WindowExec). The offset
-    expressions are ONE parsed SQL string: the previous per-lambda
-    Column construction cost ~300 driver py4j round trips per
-    invocation — pure plan-construction overhead on every consumer.
-    Round 17: the output artifact is materialized at build time and the
-    local stage's storage is then RELEASED (_materialize_and_release_local)
-    — steady state holds ONE corpus-sized artifact per input, not two."""
+    cumsum (that would be a single-partition WindowExec); the offset
+    expressions are ONE parsed SQL string (per-lambda Column
+    construction cost ~300 driver py4j round trips per invocation)."""
     from pyspark.sql.window import Window
 
-    (base, stats) = _plan_sig(df, keys, n_parts)
-
-    def _build_local():
+    def _build():
         parts = df.repartitionByRange(n_parts, *keys)
-        return parts.withColumn("_pid", F.spark_partition_id()).withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy("_pid").orderBy(*keys)),
+        local = (
+            parts.withColumn("_pid", F.spark_partition_id())
+            .withColumn(
+                "_rn",
+                F.row_number().over(Window.partitionBy("_pid").orderBy(*keys)),
+            )
+            .persist()
         )
-
-    local = _memo_generation(
-        _RANK_CACHE, ((base, "local"), stats), _build_local
-    )
-
-    def _build_out():
         counts = local.groupBy("_pid").agg(F.count("*").alias("_cnt"))
         carr = counts.agg(
             F.expr("array_sort(collect_list(struct(_pid, _cnt))) AS arr")
@@ -556,20 +340,20 @@ def parallel_rank(df, keys, n_parts: int = 8):
             "(a, x) -> a + x._cnt))))",
             "aggregate(arr, CAST(0 AS BIGINT), (a, x) -> a + x._cnt) AS _n",
         )
-        return (
+        out = (
             local.join(F.broadcast(offsets), "_pid")
             .withColumn("_rank", F.col("_off") + F.col("_rn"))
             .drop("_pid", "_rn", "_off")
+            .persist()
         )
+        out.count()
+        local.unpersist(False)
+        return out
 
-    prior = _RANK_CACHE.get((base, "out"))
-    out = _memo_generation(_RANK_CACHE, ((base, "out"), stats), _build_out)
-    if prior is None or prior[0] != stats:
-        _materialize_and_release_local(out, local)
-    return out
+    return cached_artifact(df.sparkSession, sf_dir, kind, _build)
 
 
-def parallel_prefix_sum(df, keys, cols, n_parts: int = 8):
+def parallel_prefix_sum(df, keys, cols, sf_dir: str, kind: str, n_parts: int = 8):
     """Global inclusive running SUM of integer ``cols`` in ``keys`` order,
     scale-safe — the prefix-sum generalization of ``parallel_rank``:
 
@@ -583,19 +367,14 @@ def parallel_prefix_sum(df, keys, cols, n_parts: int = 8):
     anywhere; the offset fold is O(P^2) on #partitions elements in one
     tiny task. Backs agg-ks-test (two-sample CDF comparison).
 
-    Persistence and construction mirror ``parallel_rank`` (round-16): the
-    range-partitioned ``local`` stage stays a memoized persisted artifact
-    (its cache identity pins ONE physical boundary sample for both the
-    totals and output branches — plan-level sharing alone lets column
-    pruning split them into two independently-sampled range exchanges,
-    measured wrong prefixes at sf0.1), the WHOLE prefixed output is a
-    second memoized artifact (one cached scan per consumer execution
-    instead of re-running the totals/offsets stage chain), and the offset
-    expressions are one parsed SQL string instead of ~300 py4j
-    round trips of per-lambda Column construction. Round 17: the output
-    artifact is materialized at build time and the local stage's storage
-    is then RELEASED (_materialize_and_release_local) — steady state
-    holds ONE corpus-sized artifact per input, not two."""
+    Caching and construction mirror ``parallel_rank``: the output is a
+    cached artifact under (sf_dir, ``kind``); its one build persists the
+    range-partitioned ``local`` stage (its cache identity pins ONE
+    physical boundary sample for both the totals and output branches —
+    plan-level sharing alone lets column pruning split them into two
+    independently-sampled range exchanges, measured wrong prefixes at
+    sf0.1), persists and counts the prefixed output, then releases
+    ``local``. The offset expressions are one parsed SQL string."""
     from pyspark.sql.window import Window
 
     # The offset expressions interpolate each col name into parsed SQL
@@ -615,25 +394,17 @@ def parallel_prefix_sum(df, keys, cols, n_parts: int = 8):
                 "expressions)"
             )
 
-    (base, stats) = _plan_sig(df, keys, tuple(cols), n_parts)
-
-    def _build_local():
+    def _build():
         parts = df.repartitionByRange(n_parts, *keys)
         w = (
             Window.partitionBy("_pid")
             .orderBy(*keys)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        out = parts.withColumn("_pid", F.spark_partition_id())
+        local = parts.withColumn("_pid", F.spark_partition_id())
         for c in cols:
-            out = out.withColumn(f"_cum_{c}", F.sum(c).over(w))
-        return out
-
-    local = _memo_generation(
-        _RANK_CACHE, ((base, "local"), stats), _build_local
-    )
-
-    def _build_out():
+            local = local.withColumn(f"_cum_{c}", F.sum(c).over(w))
+        local = local.persist()
         totals = local.groupBy("_pid").agg(
             *[F.sum(c).cast("long").alias(f"_t_{c}") for c in cols]
         )
@@ -657,13 +428,12 @@ def parallel_prefix_sum(df, keys, cols, n_parts: int = 8):
             out = out.withColumn(
                 f"_cum_{c}", F.col(f"_off_{c}") + F.col(f"_cum_{c}")
             )
-        return out.drop("_pid", *[f"_off_{c}" for c in cols])
+        out = out.drop("_pid", *[f"_off_{c}" for c in cols]).persist()
+        out.count()
+        local.unpersist(False)
+        return out
 
-    prior = _RANK_CACHE.get((base, "out"))
-    out = _memo_generation(_RANK_CACHE, ((base, "out"), stats), _build_out)
-    if prior is None or prior[0] != stats:
-        _materialize_and_release_local(out, local)
-    return out
+    return cached_artifact(df.sparkSession, sf_dir, kind, _build)
 
 
 def dsum_scaled(col: Column | str, alias: str | None = None) -> Column:

@@ -7,42 +7,26 @@ that order an explicit, reviewable artifact instead of an accident of
 import order, so driver coverage can be *rotated* round by round until
 every entry has a green row.
 
-Round-17 window (positions 0-49) — the second OPTIMIZATION round. The
-r16-projected plan was the 37-entry r10 remainder + free slots for the
-riskiest r11 greens; this round's guard work and optimizations force 32
-re-certifications, so the r10 remainder is split: 24 windowed (all 20
-of the r15 riskiest pre-ranking + the 4 win-* scalars, three of which
-are forced anyway by the _by_cust closure addition) and 13 low-risk
-single-stage scalars explicitly deferred to round 18 via
-OLDEST_DEFERRED (named, never dropped — the r12 precedent).
+Round-18 window (positions 0-49) — the one-artifact-cache round. The
+memo consolidation (common.cached_artifact replacing the four memo
+stores, their three APIs and the plan-signature heuristic; the rank/
+prefix device keyed on explicit (sf_dir, kind)) re-hashes every cached-
+artifact referencer, which now fits one window:
 
-* 0-12 — the 13 parallel-rank/prefix-sum device referencers, forced by
-  the round-17 device edits (_plan_sig mixed-leaf fall-through,
-  prefix-sum identifier validation, build-time output materialization +
-  local-stage storage release — see OPTIMIZATION_r17.md).
-* 13-23 — the 11 non-r10 entries forced by closing the _SHARED_HELPERS
-  vector-family blind spot (r16 verdict item 3: cosine_topk/ivf_*/
-  lsh_topk/band_stack/minhash_signatures/_cosine_pairs/_recall_entry/
-  scratch_dir now hash into their referencers) and by the round-17
-  lsh_topk per-row norm hoist + SQL-string expression builds:
-  ext-sim-cosine-topk, ext-ann-ivf(+recall), ext-ann-lsh-bucket(+recall),
-  ext-dedup-near(+recall), stream-dedup-near(+cert), ext-hard-negatives,
-  ext-rank-fusion.
-* 24-25 — graph-hits, graph-k-core: round-17 builder plan-construction
-  work (SQL-string expressions, the parallel_rank precedent) forces
-  re-certification; both are also the r11 cohort's iterative heads.
-* 26-49 — the r10 remainder head, riskiest first per the r15
-  pre-ranking (multi-stage / sink / stateful before scalars):
-  sink-scd2, sink-sharded-export, sort-global, ext-pack-sequences,
-  ext-text-tfidf, ext-vocab-build, ext-bm25-search, ext-dedup-embedding,
-  ext-sim-threshold-join, ext-knn-label, ext-pii-scrub,
-  ext-quality-gopher, ext-curriculum-order, ext-mix-domains,
-  ext-mix-temperature, ext-host-token-budget, ext-sample-importance,
-  ext-split-train-eval, ext-dup-span, ext-fingerprint (the riskiest 20;
-  ext-dedup-embedding / ext-sim-threshold-join / ext-knn-label are ALSO
-  forced by the _cosine_pairs closure addition), then win-first-last,
-  win-lag-lead, win-running-agg (forced by _by_cust) and
-  win-sliding-frame (same family, free slot).
+* 0-12 — the 13 round-10 scalars OLDEST_DEFERRED named last round,
+  front-loaded (OLDEST_DEFERRED is empty again).
+* 13-46 — the 34 green entries whose entry hash the consolidation
+  changed, re-derived by diffing ``entry_hash`` against the manifest
+  regenerated at the parent: the 12 entries with a rank/prefix call
+  site, the 10 graph-* entries, the IVF/LSH/near-dedup family with its
+  certificates (8), the BPE pair (ext-bpe-train, ext-tokenize-apply),
+  ext-dedup-cluster and ext-source-similarity-matrix.
+* 47 — stream-watermark-late: the streaming plane pin changed (the
+  near-dedup sink now goes through the once-per-micro-batch wrapper),
+  and its docstring names the plane (stream-dedup-near-cert, the other
+  affected entry, is already forced above).
+* 48-49 — the next round-11 picks of the r16 riskiest-r11 ranking:
+  ext-dedup-simhash, sort-within-partitions.
 
 ``WINDOW_ROUND`` pins the round this window was planned FOR: the
 freshness test computes cohorts from ``CORRECTNESS_r{N}`` files with
@@ -52,22 +36,18 @@ is part of each rotation; a stale pin cannot coast, because a window
 planned against a newer history will not cover the stale pin's oldest
 cohort.
 
-Projected cohorts after a green r17 (r01-r16 history + this window,
+Projected cohorts after a green r18 (r01-r17 history + this window,
 recomputed empirically via scripts/freshness_report.latest_green_rounds):
-r10 x 13 (the deferred scalars below — front them in round 18),
-r11 x 40, r12 x 26, r13 x 35, r14 x 44, r15 x 43, r16 x 35, r17 x 50
-(sums to 286). The round-18
-front is therefore OLDEST_DEFERRED in full plus the riskiest r11
-remainder (recompute against scripts/freshness_report.py when
-planning; the r16 riskiest-r11 pre-ranking head minus the four already
-re-certified here: ext-dedup-simhash, stream-dedup-near is covered,
-sort-within-partitions, agg-bloom-filter, agg-countmin-sketch,
-agg-histogram, agg-percentile-exact, agg-mode-deterministic,
-agg-corr-covar, win-funnel, win-retention-cohort).
+r11 x 38, r12 x 17, r13 x 35, r14 x 44, r15 x 42, r16 x 33, r17 x 27,
+r18 x 50 (sums to 286). The round-19 front is therefore the r11
+remainder, riskiest first (recompute against scripts/freshness_report.py
+when planning): agg-bloom-filter, agg-countmin-sketch, agg-histogram,
+agg-percentile-exact, agg-mode-deterministic, agg-corr-covar,
+win-funnel, win-retention-cohort, then the single-stage scalars.
 
-Round-17 additions policy: corpus growth stays FROZEN at 286 (VERDICT
+Round-18 additions policy: corpus growth stays FROZEN at 286 (VERDICT
 r14 item 7). Any entry added mid-round must be listed here under
-"added AFTER the round-17 window filled" for round-18 front-loading.
+"added AFTER the round-18 window filled" for round-19 front-loading.
 """
 
 
@@ -77,73 +57,10 @@ from __future__ import annotations
 # CORRECTNESS_r* history of rounds STRICTLY BELOW this. The freshness
 # test scopes its cohort computation the same way, so the driver dropping
 # CORRECTNESS_r{WINDOW_ROUND}.json never flips the tree red mid-round.
-WINDOW_ROUND = 17
+WINDOW_ROUND = 18
 
 DRIVER_WINDOW: tuple[str, ...] = (
-    # the 13 rank/prefix device referencers (round-17 device edits)
-    "win-percent",
-    "agg-gini-concentration",
-    "agg-ks-test",
-    "agg-survival-km",
-    "agg-spearman-corr",
-    "agg-rfm-segmentation",
-    "agg-pareto-share",
-    "agg-calibration-ece",
-    "ext-contrastive-pairs",
-    "ext-vocab-growth",
-    "ext-length-decile-mix",
-    "ext-perplexity-filter",
-    "ext-source-similarity-matrix",
-    # the 11 non-r10 entries forced by the vector-helper closure +
-    # lsh_topk/scorer optimizations
-    "ext-sim-cosine-topk",
-    "ext-ann-ivf",
-    "ext-ann-ivf-recall",
-    "ext-ann-lsh-bucket",
-    "ext-ann-lsh-recall",
-    "ext-dedup-near",
-    "ext-dedup-near-recall",
-    "stream-dedup-near",
-    "stream-dedup-near-cert",
-    "ext-hard-negatives",
-    "ext-rank-fusion",
-    # graph builder plan-construction work (round 17)
-    "graph-hits",
-    "graph-k-core",
-    # r10 remainder head, riskiest first (r15 pre-ranking)
-    "sink-scd2",
-    "sink-sharded-export",
-    "sort-global",
-    "ext-pack-sequences",
-    "ext-text-tfidf",
-    "ext-vocab-build",
-    "ext-bm25-search",
-    "ext-dedup-embedding",
-    "ext-sim-threshold-join",
-    "ext-knn-label",
-    "ext-pii-scrub",
-    "ext-quality-gopher",
-    "ext-curriculum-order",
-    "ext-mix-domains",
-    "ext-mix-temperature",
-    "ext-host-token-budget",
-    "ext-sample-importance",
-    "ext-split-train-eval",
-    "ext-dup-span",
-    "ext-fingerprint",
-    # the r10 win-* scalars (three forced by the _by_cust closure
-    # addition, the fourth rides the free slot)
-    "win-first-last",
-    "win-lag-lead",
-    "win-running-agg",
-    "win-sliding-frame",
-)
-
-# The 13 lowest-risk r10-cohort members (single-stage scalar entries)
-# that the 32 forced re-certifications displaced from this round's
-# window — NAMED deferrals, front-loaded in round 18. Legal only while
-# every window slot is spoken for (the freshness test enforces both).
-OLDEST_DEFERRED: tuple[str, ...] = (
+    # the 13 round-10 scalars deferred by round 17, front-loaded
     "ext-dedup-url",
     "ext-embed-stats",
     "ext-filter-composite",
@@ -157,7 +74,57 @@ OLDEST_DEFERRED: tuple[str, ...] = (
     "ext-token-count",
     "ext-token-histogram",
     "func-url",
+    # the 34 entries re-hashed by the one-artifact-cache consolidation:
+    # rank/prefix call sites
+    "win-percent",
+    "agg-gini-concentration",
+    "agg-ks-test",
+    "agg-survival-km",
+    "agg-spearman-corr",
+    "agg-rfm-segmentation",
+    "agg-pareto-share",
+    "agg-calibration-ece",
+    "ext-contrastive-pairs",
+    "ext-vocab-growth",
+    "ext-length-decile-mix",
+    "ext-perplexity-filter",
+    # graph artifacts
+    "graph-pagerank",
+    "graph-personalized-pagerank",
+    "graph-degree-assortativity",
+    "graph-triangle-count",
+    "graph-jaccard-neighbors",
+    "graph-bfs-hops",
+    "graph-minplus-distance",
+    "graph-connected-components",
+    "graph-k-core",
+    "graph-hits",
+    # signature tables and ANN indexes, with their certificates
+    "ext-ann-ivf",
+    "ext-ann-ivf-recall",
+    "ext-ann-lsh-bucket",
+    "ext-ann-lsh-recall",
+    "ext-dedup-near",
+    "ext-dedup-near-recall",
+    "stream-dedup-near",
+    "stream-dedup-near-cert",
+    # pipeline artifacts
+    "ext-bpe-train",
+    "ext-tokenize-apply",
+    "ext-dedup-cluster",
+    "ext-source-similarity-matrix",
+    # streaming plane pin (near-dedup sink wrap)
+    "stream-watermark-late",
+    # next round-11 picks
+    "ext-dedup-simhash",
+    "sort-within-partitions",
 )
+
+# Oldest-cohort members displaced from the window by forced
+# re-certifications — NAMED deferrals, front-loaded next round. Legal
+# only while every window slot is spoken for (the freshness test
+# enforces both). Empty in round 18: the r10 cohort is windowed above.
+OLDEST_DEFERRED: tuple[str, ...] = ()
 
 
 def reorder(corpus: dict) -> None:

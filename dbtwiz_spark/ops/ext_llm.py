@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 
 from dbtwiz_spark.ops.common import (
     views, davg, davg_sql, hkey_sql, dsum_q8, dsum_q8_sql,
-    register_memo_store,
+    cached_artifact,
 )
 from dbtwiz_spark.ops.registry import register
 
@@ -396,11 +396,9 @@ def ext_ngram_jaccard(spark, sf_dir):
 NUM_PERM = 32
 BANDS = 8  # 8 bands x 4 rows: catches jaccard >~0.5 candidates w.h.p.
 
-# Built artifacts (persisted signature tables / ANN indexes), memoized per
-# (session id, sf_dir[, kind]) — the long-lived-session analog of a
+# Built artifacts (persisted signature tables / ANN indexes) live in
+# common.cached_artifact — the long-lived-session analog of a
 # materialized index table: build once, serve every query.
-_ARTIFACTS: dict[tuple, object] = {}
-register_memo_store(_ARTIFACTS)
 
 
 def minhash_signatures(sh: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
@@ -482,9 +480,7 @@ def ext_dedup_near(spark, sf_dir):
     # Memoized per (session, sf_dir): it is a built artifact (at scale, a
     # materialized table), so repeat calls in a long-lived session reuse the
     # SAME persisted DataFrame instead of re-persisting an identical plan.
-    key = (spark, sf_dir, "lsh_per_doc_capped")
-    per_doc = _ARTIFACTS.get(key)
-    if per_doc is None:
+    def _build_per_doc():
         # the DF cap runs BEFORE MinHash so signatures, banding, and the
         # verification Jaccard all live in the same shingle universe as the
         # exact baseline (ext-ngram-jaccard) — without it a pair's capped
@@ -493,7 +489,7 @@ def ext_dedup_near(spark, sf_dir):
         # recall miss. Hot shingles also carry no discriminative signal and
         # are exactly the band-bucket hot keys the LSH join must avoid.
         sh = cap_shingle_df(shingles(d, 3), d)
-        per_doc = (
+        return (
             sh.groupBy("doc_id")
             .agg(
                 *[
@@ -504,18 +500,17 @@ def ext_dedup_near(spark, sf_dir):
             )
             .persist()
         )
-        _ARTIFACTS[key] = per_doc
+
+    per_doc = cached_artifact(spark, sf_dir, "lsh_per_doc_capped", _build_per_doc)
     # The band-signature table is ALSO a session artifact (round-16): the
     # candidate self-join consumes it on BOTH sides, so un-persisted it
     # re-ran the band explode + xxhash twice per execution. Doc-granular
     # (bands x docs rows of three narrow columns), so the extra storage
     # is bounded like per_doc itself; at scale this is the materialized
     # signature store the streaming path (band_signatures) writes anyway.
-    skey = (spark, sf_dir, "lsh_band_stack")
-    stacked = _ARTIFACTS.get(skey)
-    if stacked is None:
-        stacked = band_stack(per_doc).persist()
-        _ARTIFACTS[skey] = stacked
+    stacked = cached_artifact(
+        spark, sf_dir, "lsh_band_stack", lambda: band_stack(per_doc).persist()
+    )
     a, b = stacked.alias("a"), stacked.alias("b")
     candidates = (
         a.join(
@@ -1227,9 +1222,7 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_index(
-    emb: DataFrame, n_cells: int = 16, lloyd_iters: int = 1, cache_key: tuple | None = None
-):
+def ivf_index(emb: DataFrame, n_cells: int = 16, lloyd_iters: int = 1):
     """IVF coarse quantizer: deterministic seeds (the K smallest vec_ids)
     refined by Lloyd iterations, all as DataFrame ops.
 
@@ -1237,10 +1230,9 @@ def ivf_index(
     precomputed candidate norm, and cents_row is the ONE-ROW collapsed
     centroid array the probe selectors consume (round 16). The Lloyd
     recompute is a groupBy(cell, dim) mean — one shuffle per iteration
-    bounded by K × dims rows out. With ``cache_key`` the built 3-tuple is
-    memoized (build once per session, like a materialized index table)."""
-    if cache_key is not None and cache_key in _ARTIFACTS:
-        return _ARTIFACTS[cache_key]
+    bounded by K × dims rows out. Corpus entries serve the built 3-tuple
+    from common.cached_artifact (build once per session, like a
+    materialized index table)."""
     # seed numbering is window-free: collect the K seed ids into one sorted
     # array and number each seed by its array position (a global-order window
     # here would run single-partition and trip the WindowExec warning; K rows
@@ -1274,10 +1266,7 @@ def ivf_index(
     # cache entry.
     centroids = centroids.persist()
     cents_row = _centroids_as_array(centroids).persist()
-    out = (ivf_assign(emb, centroids).persist(), centroids, cents_row)
-    if cache_key is not None:
-        _ARTIFACTS[cache_key] = out
-    return out
+    return (ivf_assign(emb, centroids).persist(), centroids, cents_row)
 
 
 def ivf_topk(
@@ -1286,13 +1275,14 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     nprobe: int = 4,
-    cache_key: tuple | None = None,
+    index: tuple | None = None,
 ) -> DataFrame:
     """IVF search: probe the ``nprobe`` nearest cells per query, exact cosine
     only against those cells' members. At 100 TB the index is built once and
     persisted partitioned by cell; a query touches nprobe/n_cells of the
-    corpus instead of all of it."""
-    index, centroids, cents_row = ivf_index(emb, n_cells, cache_key=cache_key)
+    corpus instead of all of it. ``index`` is a built ``ivf_index``
+    3-tuple; without one the index is built for this call."""
+    index, centroids, cents_row = index or ivf_index(emb, n_cells)
     # probe selection is map-side too: sort the per-query (score, neg_cell)
     # array descending (ascending sort + reverse ⇒ score desc, cell asc on
     # ties) and slice the first nprobe cells — no window, no shuffle; ONE
@@ -1412,14 +1402,8 @@ def ext_ann_ivf(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_embedding")
     )
-    return ivf_topk(
-        emb,
-        queries,
-        k=10,
-        n_cells=16,
-        nprobe=4,
-        cache_key=(spark, sf_dir, "ivf16"),
-    )
+    index = cached_artifact(spark, sf_dir, "ivf16", lambda: ivf_index(emb, 16))
+    return ivf_topk(emb, queries, k=10, n_cells=16, nprobe=4, index=index)
 
 
 def _exact_topk(spark, emb, query_pred, k: int = 10):
@@ -1500,9 +1484,10 @@ def ext_ann_ivf_recall(spark, sf_dir):
     q = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_embedding")
     )
-    approx = ivf_topk(
-        emb, q, k=10, n_cells=16, nprobe=4, cache_key=(spark, sf_dir, "ivf16")
-    ).select("q_vec_id", "c_vec_id")
+    index = cached_artifact(spark, sf_dir, "ivf16", lambda: ivf_index(emb, 16))
+    approx = ivf_topk(emb, q, k=10, n_cells=16, nprobe=4, index=index).select(
+        "q_vec_id", "c_vec_id"
+    )
     return _recall_entry(spark, sf_dir, approx, floor=0.40)
 
 
@@ -1888,7 +1873,10 @@ def ext_contrastive_pairs(spark, sf_dir):
     d = views(spark, sf_dir).table("documents")
     pos = ext_ngram_jaccard(spark, sf_dir)
     ranked = parallel_rank(
-        d.select("doc_id"), [hkey(F.col("doc_id")), F.col("doc_id")]
+        d.select("doc_id"),
+        [hkey(F.col("doc_id")), F.col("doc_id")],
+        sf_dir,
+        "ext-contrastive-pairs",
     ).select("doc_id", "_rank", "_n")
     h1 = ranked.select(
         F.col("doc_id").alias("doc_a"),

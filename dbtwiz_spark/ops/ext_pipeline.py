@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from dbtwiz_spark.ops.common import (
     _truncate,
+    cached_artifact,
     davg,
     davg_sql,
     dsum_q4,
@@ -28,31 +29,10 @@ from dbtwiz_spark.ops.common import (
 )
 from dbtwiz_spark.ops.common import hkey as _hkey
 from dbtwiz_spark.ops.common import hkey_sql as _hkey_sql
-from dbtwiz_spark.ops.common import (
-    memo_artifact,
-    memo_artifact_raw,
-    register_memo_store,
-)
 from dbtwiz_spark.ops.registry import register
 
-# Persisted derived tables memoized per (session, sf_dir, kind) — the
-# graphs._ARTIFACTS pattern. Enrolled in the common memo registry so
-# clear_session_memos() evicts these too.
-_ARTIFACTS: dict[tuple, object] = {}
-register_memo_store(_ARTIFACTS)
-
-
-def _pipe_artifact(spark, sf_dir: str, kind: str, build):
-    # store-bound alias of common.memo_artifact (round-12 consolidation
-    # of the graphs/ext_pipeline twins); semantics documented there
-    return memo_artifact(_ARTIFACTS, spark, sf_dir, kind, build)
-
-
-def _pipe_artifact_raw(spark, sf_dir: str, kind: str, build):
-    # memo-only variant for already-checkpointed builders — stacking
-    # persist() on checkpoint blocks would double-store; see
-    # common.memo_artifact_raw
-    return memo_artifact_raw(_ARTIFACTS, spark, sf_dir, kind, build)
+# Derived tables (converged labels, vocabularies, token sets) are session
+# artifacts in common.cached_artifact, one per (session, sf_dir, kind).
 
 
 @register(
@@ -942,7 +922,7 @@ def ext_dedup_cluster(spark, sf_dir):
     # under SPARK_GRAFT_CHECKPOINT_DIR the per-call checkpoint files
     # (Spark never deletes them) stop accumulating across repeat
     # invocations in one session (round-10 review find)
-    labels = _pipe_artifact_raw(
+    labels = cached_artifact(
         spark, sf_dir, "dedup_cluster_labels", _build_converged_labels
     )
     return labels.select(
@@ -1846,6 +1826,7 @@ def _bpe_reps(spark, sf_dir):
             toks.filter((F.length("w") >= 2) & (F.length("w") <= 12))
             .groupBy(F.col("w").alias("word"))
             .agg(F.count("*").alias("cnt"))
+            .persist()
         )
 
     # The word vocabulary IS the one corpus-sized shuffle of BPE training
@@ -1853,8 +1834,8 @@ def _bpe_reps(spark, sf_dir):
     # chains back to it — a session artifact (round-16) so the corpus
     # explode + aggregation runs once per (session, scale), not once per
     # training/encode invocation; vocabulary-sized storage, evicted with
-    # the other memo stores.
-    words = _pipe_artifact(spark, sf_dir, "bpe_words", _build_words)
+    # the other cached artifacts.
+    words = cached_artifact(spark, sf_dir, "bpe_words", _build_words)
     rep = words.select(
         "word",
         "cnt",
@@ -2216,7 +2197,9 @@ def ext_vocab_growth(spark, sf_dir):
             F.coalesce("n_new", F.lit(0)).alias("n_new"),
         )
     )
-    cum = parallel_prefix_sum(j, [F.col("bucket")], ["n_tokens", "n_new"])
+    cum = parallel_prefix_sum(
+        j, [F.col("bucket")], ["n_tokens", "n_new"], sf_dir, "ext-vocab-growth"
+    )
     return cum.select(
         "bucket",
         F.col("_cum_n_tokens").cast("long").alias("cum_tokens"),
@@ -2404,7 +2387,9 @@ def ext_length_decile_mix(spark, sf_dir):
     d = views(spark, sf_dir).table("documents").select(
         "doc_id", "lang", "n_chars"
     )
-    r = parallel_rank(d, [F.col("n_chars"), F.col("doc_id")])
+    r = parallel_rank(
+        d, [F.col("n_chars"), F.col("doc_id")], sf_dir, "ext-length-decile-mix"
+    )
     dec = r.select(
         "lang",
         (
@@ -2593,7 +2578,7 @@ def ext_perplexity_filter(spark, sf_dir):
             .alias("score")
         )
     )
-    rk = parallel_rank(scored, ["score", "doc_id"])
+    rk = parallel_rank(scored, ["score", "doc_id"], sf_dir, "ext-perplexity-filter")
     gated = d.join(
         rk.select(
             "doc_id",
@@ -2831,7 +2816,10 @@ def agg_calibration_ece(spark, sf_dir):
 
     d = views(spark, sf_dir).table("documents")
     rk = parallel_rank(
-        d.select("doc_id", "lang", "n_chars"), ["n_chars", "doc_id"]
+        d.select("doc_id", "lang", "n_chars"),
+        ["n_chars", "doc_id"],
+        sf_dir,
+        "agg-calibration-ece",
     )
     b = rk.select(
         (F.expr("div((_rank - 1) * 10, _n)") + 1).alias("bin"),
@@ -2908,13 +2896,13 @@ def ext_source_similarity_matrix(spark, sf_dir):
     # (oracle sweeps, bench best-of-3, multi-scale runs) would otherwise
     # leak a fresh persisted copy for the session lifetime (round-8
     # ADVICE — the parallel_rank leak pattern).
-    st = _pipe_artifact(
+    st = cached_artifact(
         spark,
         sf_dir,
         "srcsim_st",
-        lambda: d.select(
-            "source", F.explode(F.split("text", " ")).alias("tok")
-        ).distinct(),
+        lambda: d.select("source", F.explode(F.split("text", " ")).alias("tok"))
+        .distinct()
+        .persist(),
     )
     sz = st.groupBy("source").agg(F.count("*").alias("n"))
     a = st.select(F.col("source").alias("src_a"), "tok")

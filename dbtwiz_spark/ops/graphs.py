@@ -20,41 +20,22 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbtwiz_spark.ops.common import (
-    _truncate,
-    memo_artifact,
-    memo_artifact_raw,
-    register_memo_store,
-    views,
-)
+from dbtwiz_spark.ops.common import _truncate, cached_artifact, views
 from dbtwiz_spark.ops.registry import register
 
 _SCALE = 1_000_000_000_000_000  # 10^15 fixed-point scale
 _ITER = 3
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 
-# Derived graph tables (edge lists, degree tables), persisted and memoized
-# per (session, sf_dir, kind) — the ext_llm._ARTIFACTS pattern. Without
-# this, every iteration of an iterative op RE-DERIVES the edge list from
-# the base tables (the rank lineage references edges once per hop), which
-# measured 13 s for 3-hop PageRank at sf0.1 vs ~2 s with the edge artifact
-# cached. On a cluster the same role is played by a checkpointed/
-# materialized edge table.
-_ARTIFACTS: dict[tuple, object] = {}
-register_memo_store(_ARTIFACTS)
-
-
-def _artifact(spark, sf_dir: str, kind: str, build):
-    # store-bound alias of common.memo_artifact (round-12 consolidation
-    # of the graphs/ext_pipeline twins); semantics documented there
-    return memo_artifact(_ARTIFACTS, spark, sf_dir, kind, build)
-
-
-def _artifact_raw(spark, sf_dir: str, kind: str, build):
-    # memo-only variant for already-checkpointed builders — stacking
-    # persist() on checkpoint blocks would double-store; see
-    # common.memo_artifact_raw
-    return memo_artifact_raw(_ARTIFACTS, spark, sf_dir, kind, build)
+# Derived graph tables (edge lists, degree tables, converged rank/label/
+# distance tables) are session artifacts in common.cached_artifact, one
+# per (session, sf_dir, kind). Without them, every iteration of an
+# iterative op RE-DERIVES the edge list from the base tables (the rank
+# lineage references edges once per hop), which measured 13 s for 3-hop
+# PageRank at sf0.1 vs ~2 s with the edge artifact cached. On a cluster
+# the same role is played by a checkpointed/materialized edge table.
+# Builders over ``_truncate`` store the checkpoint as is; the others
+# persist.
 
 
 def _pagerank_oracle() -> str:
@@ -104,8 +85,9 @@ def _pr_edges(spark, sf_dir, cat):
     join twice (exchange reuse does not fire across union branches; the
     cc_edges builder verified 0 ReusedExchange on the executed plan).
     The mirrored union over the truncated table is two local scans, so
-    the memo is ``_artifact_raw`` (no extra persist — the checkpoint
-    blocks ARE the storage; stacking persist would double-store)."""
+    the cached artifact is the union as is (no extra persist — the
+    checkpoint blocks ARE the storage; stacking persist would
+    double-store)."""
 
     def _build_edges():
         o, li = cat.table("orders"), cat.table("lineitem")
@@ -121,17 +103,18 @@ def _pr_edges(spark, sf_dir, cat):
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
-    return _artifact_raw(spark, sf_dir, "pr_edges", _build_edges)
+    return cached_artifact(spark, sf_dir, "pr_edges", _build_edges)
 
 
 def _pr_deg(spark, sf_dir, edges):
-    return _artifact(
+    return cached_artifact(
         spark,
         sf_dir,
         "pr_deg",
         lambda: edges.groupBy("src")
         .agg(F.count("*").alias("degree"))
-        .withColumnRenamed("src", "node"),
+        .withColumnRenamed("src", "node")
+        .persist(),
     )
 
 
@@ -200,7 +183,7 @@ def graph_pagerank(spark, sf_dir):
             )
         return _truncate(ranks)
 
-    final = _artifact_raw(spark, sf_dir, "pr_ranks_final", _build_final_ranks)
+    final = cached_artifact(spark, sf_dir, "pr_ranks_final", _build_final_ranks)
     return (
         final.select("node", F.col("rank").alias("pagerank_fp"))
         .orderBy(F.desc("pagerank_fp"), "node")
@@ -263,7 +246,9 @@ def graph_triangle_count(spark, sf_dir):
     device this bounded demo graph (supplier key <= 100 at any SF)
     doesn't need."""
     cat = views(spark, sf_dir)
-    cs = _artifact(spark, sf_dir, "cs100", lambda: _copurchase_cs(cat))
+    cs = cached_artifact(
+        spark, sf_dir, "cs100", lambda: _copurchase_cs(cat).persist()
+    )
     a = cs.select(F.col("c"), F.col("s").alias("sa"))
     b = cs.select(F.col("c"), F.col("s").alias("sb"))
     p = (
@@ -278,13 +263,14 @@ def graph_triangle_count(spark, sf_dir):
     # the thresholded edge set feeds FOUR consumers (three wedge-join
     # aliases + the edge count): persist so the customer self-join that
     # produces it runs once
-    e = _artifact(
+    e = cached_artifact(
         spark,
         sf_dir,
         "tri_edges",
         lambda: p.crossJoin(F.broadcast(thr))
         .filter(F.col("shared") > F.col("t"))
-        .select("sa", "sb"),
+        .select("sa", "sb")
+        .persist(),
     )
     e1 = e.select(F.col("sa").alias("a"), F.col("sb").alias("b"))
     e2 = e.select(F.col("sa").alias("a"), F.col("sb").alias("c"))
@@ -333,7 +319,9 @@ def graph_jaccard_neighbors(spark, sf_dir):
     shingles (drop or sample customers whose supplier list exceeds a
     bound -- they contribute near-zero Jaccard signal)."""
     cat = views(spark, sf_dir)
-    cs = _artifact(spark, sf_dir, "cs100", lambda: _copurchase_cs(cat))
+    cs = cached_artifact(
+        spark, sf_dir, "cs100", lambda: _copurchase_cs(cat).persist()
+    )
     deg = cs.groupBy("s").agg(F.count("*").alias("d"))
     a = cs.select("c", F.col("s").alias("sa"))
     b = cs.select("c", F.col("s").alias("sb"))
@@ -430,8 +418,8 @@ def graph_bfs_hops(spark, sf_dir):
 
     # referenced once per hop by the distance lineage; the mirrored
     # union over the truncated pair table is two local scans, so the
-    # memo is raw (no persist on top of the checkpoint blocks)
-    edges = _artifact_raw(spark, sf_dir, "bfs_edges", _build_bfs_edges)
+    # artifact stores it as is (no persist on top of the checkpoint blocks)
+    edges = cached_artifact(spark, sf_dir, "bfs_edges", _build_bfs_edges)
 
     def _build_dist():
         dist = spark.createDataFrame([("s1", 0)], "node STRING, dist INT")
@@ -452,7 +440,7 @@ def graph_bfs_hops(spark, sf_dir):
 
     # converged distance table memoized per (session, scale) — the CC
     # label-table pattern; repeat sweeps pay only the summary rollup
-    dist = _artifact_raw(spark, sf_dir, "bfs_dist", _build_dist)
+    dist = cached_artifact(spark, sf_dir, "bfs_dist", _build_dist)
     return (
         dist.groupBy("dist")
         .agg(
@@ -534,7 +522,7 @@ def graph_minplus_distance(spark, sf_dir):
             F.col("c").alias("src"), F.col("s").alias("dst"), "w"
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
 
-    edges = _artifact_raw(spark, sf_dir, "minplus_edges", _build_weighted_edges)
+    edges = cached_artifact(spark, sf_dir, "minplus_edges", _build_weighted_edges)
 
     def _build_dist():
         dist = spark.createDataFrame([("s1", 0)], "node STRING, dist LONG")
@@ -554,7 +542,7 @@ def graph_minplus_distance(spark, sf_dir):
 
     # converged distance table memoized per (session, scale) — the CC
     # label-table pattern; repeat sweeps return the flat scan directly
-    return _artifact_raw(spark, sf_dir, "minplus_dist", _build_dist)
+    return cached_artifact(spark, sf_dir, "minplus_dist", _build_dist)
 
 
 _CC_ROUNDS = 8
@@ -671,7 +659,7 @@ def graph_connected_components(spark, sf_dir):
         # projections differ and Spark's exchange reuse does not fire
         # (verified on the executed plan: 0 ReusedExchange, 2 joins).
         # The mirrored union over the truncated table is two local
-        # scans, so the memo (_artifact_raw, no extra persist — the
+        # scans, so the artifact (stored as is, no extra persist — the
         # checkpoint blocks ARE the storage) holds a flat cheap plan.
         pairs = _truncate(
             o.join(li, o.o_orderkey == li.l_orderkey)
@@ -691,8 +679,8 @@ def graph_connected_components(spark, sf_dir):
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
-    edges = _artifact_raw(spark, sf_dir, "cc_edges", _build_cc_edges)
-    lbl = _artifact_raw(
+    edges = cached_artifact(spark, sf_dir, "cc_edges", _build_cc_edges)
+    lbl = cached_artifact(
         spark, sf_dir, "cc_labels", lambda: _cc_propagate(edges, _CC_ROUNDS)
     )
     return lbl.groupBy(F.col("lbl").alias("component")).agg(
@@ -889,7 +877,7 @@ def graph_k_core(spark, sf_dir):
             F.col("c").alias("src"), F.col("s").alias("dst")
         ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
-    edges = _artifact_raw(spark, sf_dir, "kcore_edges", _build_edges)
+    edges = cached_artifact(spark, sf_dir, "kcore_edges", _build_edges)
     per_round = []
     # Per-round frames are (re)constructed on EVERY invocation (the
     # edge artifacts are memoized, the count frames are not) — round 17
@@ -918,7 +906,7 @@ def graph_k_core(spark, sf_dir):
         # (and switches to reliable checkpoint() under
         # SPARK_GRAFT_CHECKPOINT_DIR). Bind loop state via defaults — a
         # bare closure would capture the final round's variables.
-        edges = _artifact_raw(
+        edges = cached_artifact(
             spark, sf_dir, f"kcore_e{i}", lambda p=_peel: _truncate(p())
         )
         nodes_row = keep.selectExpr(
@@ -1127,9 +1115,10 @@ def graph_hits(spark, sf_dir):
                 ),
             )
             .distinct()
+            .persist()
         )
 
-    pairs = _artifact(spark, sf_dir, "hits_pairs", _build_pairs)
+    pairs = cached_artifact(spark, sf_dir, "hits_pairs", _build_pairs)
     # Plan construction from parsed SQL strings (round 17, the
     # parallel_rank precedent): these frames are rebuilt on every
     # invocation while the half-step artifacts are memoized, so the
@@ -1151,7 +1140,7 @@ def graph_hits(spark, sf_dir):
         # ~1 s. _truncate switches to reliable checkpoint() when
         # SPARK_GRAFT_CHECKPOINT_DIR is set — the cluster-grade form of
         # the same plan-growth bound.
-        ar = _artifact_raw(
+        ar = cached_artifact(
             spark,
             sf_dir,
             f"hits_ar{i}",
@@ -1165,7 +1154,7 @@ def graph_hits(spark, sf_dir):
         a_norm = ar.crossJoin(F.broadcast(asum)).selectExpr(
             "anode AS node", f"a div (t div {_HSCALE}) AS a"
         )
-        hr = _artifact_raw(
+        hr = cached_artifact(
             spark,
             sf_dir,
             f"hits_hr{i}",

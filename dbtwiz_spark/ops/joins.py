@@ -478,7 +478,7 @@ def filter_exists_correlated(spark, sf_dir):
 
 # bucketed-layout tables built once per (session, sf_dir) — the long-lived
 # session analog of a materialized bucketed table pair. Keyed on the
-# SESSION OBJECT (same convention as ext_llm._ARTIFACTS), never id():
+# SESSION OBJECT (same convention as common.cached_artifact), never id():
 # CPython reuses addresses after GC, so an id-keyed hit could skip the
 # build for a brand-new session whose catalog has no bucketed tables.
 _BUCKETED: dict[tuple, bool] = {}

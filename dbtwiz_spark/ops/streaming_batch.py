@@ -14,7 +14,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dbtwiz_spark.ops.common import views, davg, davg_sql, dsum, dsum_sql
+from dbtwiz_spark.ops.common import (
+    cached_artifact,
+    davg,
+    davg_sql,
+    dsum,
+    dsum_sql,
+    views,
+)
 from dbtwiz_spark.ops.registry import register
 
 
@@ -255,24 +262,20 @@ def stream_dedup_near(spark, sf_dir):
     tests/test_streaming.py::test_stream_dedup_near_entry_matches_sink.
 
     Scale shape: signatures + banding are the shared batch-path helpers
-    (one shuffle, persisted via the memoized-artifact pattern because two
+    (one shuffle, a persisted cached artifact because two
     consumers — the bucket-minimum aggregate and the probe join — would
     otherwise each recompute the full shingle->minhash pipeline), and the
     collision test is an equi-join of the band stream against its
     per-bucket minimum — never a pair join."""
-    from dbtwiz_spark.ops.ext_llm import (
-        _ARTIFACTS,
-        band_stack,
-        minhash_signatures,
-        shingles,
-    )
+    from dbtwiz_spark.ops.ext_llm import band_stack, minhash_signatures, shingles
 
     d = views(spark, sf_dir).table("documents")
-    key = (spark, sf_dir, "stream_band_sigs")
-    sigs = _ARTIFACTS.get(key)
-    if sigs is None:
-        sigs = band_stack(minhash_signatures(shingles(d, 3))).persist()
-        _ARTIFACTS[key] = sigs
+    sigs = cached_artifact(
+        spark,
+        sf_dir,
+        "stream_band_sigs",
+        lambda: band_stack(minhash_signatures(shingles(d, 3))).persist(),
+    )
     firsts = sigs.groupBy("band", "sig").agg(F.min("doc_id").alias("first_doc"))
     dups = (
         sigs.join(firsts, ["band", "sig"])

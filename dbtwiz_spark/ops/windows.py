@@ -210,9 +210,9 @@ def win_percent(spark, sf_dir):
 
     c = views(spark, sf_dir).table("customer")
     keys = [F.col("c_acctbal"), F.col("c_custkey")]
-    ranked = parallel_rank(c.select("c_custkey", "c_acctbal"), keys).select(
-        "c_custkey", "_rank", "_n"
-    )
+    ranked = parallel_rank(
+        c.select("c_custkey", "c_acctbal"), keys, sf_dir, "win-percent"
+    ).select("c_custkey", "_rank", "_n")
     return ranked.select(
         "c_custkey",
         F.when(F.col("_n") > 1, (F.col("_rank") - 1) / (F.col("_n") - 1))

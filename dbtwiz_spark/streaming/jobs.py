@@ -14,10 +14,7 @@ an empty check plus a merge (whose plan reads its updates twice) would
 run the stateful plan three times per micro-batch. ``_once_per_batch``
 persists the batch, skips empty batches, runs the sink body on the
 cached rows and unpersists in ``finally``, so a raising sink leaves no
-cached blocks. ``foreach_batch_near_dedup`` is not wrapped yet: the
-corpus certificate ``stream-dedup-near-cert`` replays through it, so
-changing its execution waits for that entry to re-enter the driver
-window.
+cached blocks.
 """
 
 from __future__ import annotations
@@ -360,9 +357,8 @@ def foreach_batch_near_dedup(
     duration — which is why this lives in foreachBatch against a table
     rather than in bounded operator state."""
 
+    @_once_per_batch
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sigs = band_signatures(batch_df).persist()
         try:
             store_exists = warehouse.exists(sig_table)

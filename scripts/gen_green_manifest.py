@@ -64,17 +64,10 @@ _SHARED_HELPERS = (
     "hkey",
     "cap_shingle_df",
     "shingles",
-    "_plan_sig",
     "_cc_propagate",
     "_pr_edges",
     "_pr_deg",
     "_copurchase_cs",
-    "_pipe_artifact",
-    "_artifact",
-    # appended LAST deliberately: tuple order feeds the hash part order,
-    # so appending keeps every existing entry's hash stable while new
-    # referencers (_artifact_raw users) gain the extra part
-    "_artifact_raw",
     # round-10: the switchable lineage-truncation device (localCheckpoint
     # vs reliable checkpoint under SPARK_GRAFT_CHECKPOINT_DIR) used by
     # CC/HITS/k-core/dedup-cluster — appended last, same reasoning.
@@ -83,18 +76,6 @@ _SHARED_HELPERS = (
     # behavior with no hash trip (the parallel_rank blind spot again)
     "_truncate",
     "_checkpoint_dir",
-    # round-12: the store-parameterized memo pair in ops/common.py that
-    # the graphs/ext_pipeline _artifact/_pipe_artifact wrappers now
-    # delegate to — appended last (hash-stability rule); without these,
-    # an edit to the shared implementation would change every memoized
-    # artifact's runtime behavior with no hash trip. "memo_artifact" is
-    # a substring of "memo_artifact_raw": over-inclusion only ever
-    # forces a re-window.
-    "memo_artifact",
-    "memo_artifact_raw",
-    # round-12: the generation-evicting memo lookup behind parallel_rank /
-    # parallel_prefix_sum (the _plan_sig size+mtime hardening's consumer)
-    "_memo_generation",
     # round-17 (r16 verdict item 3 — the cosine/IVF helper blind spot):
     # the round-16 edits to cosine_topk / ivf_* changed the runtime plans
     # of three certified entries with ZERO hash drift because none of the
@@ -126,10 +107,17 @@ _SHARED_HELPERS = (
     "_recall_entry",
     "_by_cust",
     "scratch_dir",
-    # round-17: the rank/prefix device's build-time storage-release step —
-    # _materialize_and_release_local is parallel_rank/prefix_sum's callee
-    # (the _checkpoint_dir-under-_truncate reasoning)
-    "_materialize_and_release_local",
+    # round-18: the one artifact cache behind every memoized artifact and
+    # the rank/prefix device (it replaced the per-module memo stores and
+    # their wrappers, whose names left this tuple with them) — appended
+    # last per the hash-stability rule; without it an edit to the cache
+    # (key, generation check, eviction) would change every cached
+    # artifact's runtime behavior with no hash trip. _generation and
+    # _unpersist are its callees (the _checkpoint_dir-under-_truncate
+    # reasoning)
+    "cached_artifact",
+    "_generation",
+    "_unpersist",
 )
 
 # Certificate coupling (round 12, closing the corpus_order.py:72-86

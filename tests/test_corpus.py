@@ -291,8 +291,9 @@ def test_round7_block2_invariants(spark):
     # — same _cc_propagate the entry runs, so the test can never verify
     # a different algorithm
     from dbtwiz_spark.ops import graphs as G
+    from dbtwiz_spark.ops.common import _ARTIFACT_CACHE
 
-    edges = G._ARTIFACTS[(spark, SF_DIR, "cc_edges")]
+    _gen, edges = _ARTIFACT_CACHE[(spark, SF_DIR, "cc_edges")]
     lbl = G._cc_propagate(edges, G._CC_ROUNDS + 1)
     extra = {
         (r.component, r.n_nodes)
@@ -1014,24 +1015,24 @@ def test_round8_source_similarity_memoizes_token_table(spark):
     """Round-8 ADVICE: ext-source-similarity-matrix used a bare .cache()
     on its (source, token) distinct table — every invocation (oracle
     sweeps, bench best-of-3) leaked a fresh persisted copy for the
-    session lifetime. Now routed through the session-keyed _pipe_artifact
-    memo: repeated invocations share ONE persisted table."""
-    from dbtwiz_spark.ops import CORPUS, ext_pipeline
+    session lifetime. Now routed through the session-keyed
+    cached_artifact: repeated invocations share ONE persisted table."""
+    from dbtwiz_spark.ops import CORPUS
+    from dbtwiz_spark.ops.common import _ARTIFACT_CACHE, clear_session_memos
     from tests.conftest import SF_DIR
 
-    ext_pipeline._ARTIFACTS.clear()
+    clear_session_memos()
     fn = CORPUS["ext-source-similarity-matrix"].fn
     n1 = fn(spark, SF_DIR).count()
-    assert len(ext_pipeline._ARTIFACTS) == 1
+    assert len(_ARTIFACT_CACHE) == 1
+    (_gen, st) = _ARTIFACT_CACHE[(spark, SF_DIR, "srcsim_st")]
     n2 = fn(spark, SF_DIR).count()
     assert n1 == n2
-    assert len(ext_pipeline._ARTIFACTS) == 1, "second call must hit the memo"
-    (st,) = ext_pipeline._ARTIFACTS.values()
+    assert len(_ARTIFACT_CACHE) == 1, "second call must hit the cache"
+    assert _ARTIFACT_CACHE[(spark, SF_DIR, "srcsim_st")][1] is st
     assert st.storageLevel.useMemory or st.storageLevel.useDisk
-    from dbtwiz_spark.ops.common import clear_session_memos
-
-    clear_session_memos()
-    assert not ext_pipeline._ARTIFACTS
+    assert clear_session_memos() == 1
+    assert not _ARTIFACT_CACHE
 
 
 def test_truncate_reliable_matches_local(spark, tmp_path, monkeypatch):
@@ -1069,15 +1070,16 @@ def test_round10_invariants(spark):
     fixpoint + cluster validity over the mirrored pair graph, and the
     k-core trajectory's peel monotonicity with truncated rounds."""
     from dbtwiz_spark.ops import graphs as G
+    from dbtwiz_spark.ops.common import _ARTIFACT_CACHE
     from dbtwiz_spark.ops.registry import CORPUS
 
     # --- pagerank memo: a second invocation returns identical rows and
     # hits the session x scale memo (same underlying artifact object)
     pr1 = {tuple(r) for r in CORPUS["graph-pagerank"].fn(spark, SF_DIR).collect()}
-    memo_obj = G._ARTIFACTS[(spark, SF_DIR, "pr_ranks_final")]
+    memo_obj = _ARTIFACT_CACHE[(spark, SF_DIR, "pr_ranks_final")][1]
     pr2 = {tuple(r) for r in CORPUS["graph-pagerank"].fn(spark, SF_DIR).collect()}
     assert pr1 == pr2
-    assert G._ARTIFACTS[(spark, SF_DIR, "pr_ranks_final")] is memo_obj, (
+    assert _ARTIFACT_CACHE[(spark, SF_DIR, "pr_ranks_final")][1] is memo_obj, (
         "second call must hit the memo, not rebuild the iteration"
     )
     # total mass conservation within integer-floor loss: every node holds

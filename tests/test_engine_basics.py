@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dbtwiz_spark.catalog import TABLES
 from tests.conftest import SF_DIR
 
 
@@ -673,273 +674,214 @@ def test_partition_filter_guard_follows_alias_chain(spark, tmp_path):
     assert not has_partition_filter(other, "partitiondate")
 
 
+def _cache_keys(sf_dir):
+    from dbtwiz_spark.ops.common import _ARTIFACT_CACHE
+
+    return {k[2] for k in _ARTIFACT_CACHE if k[1] == sf_dir}
+
+
+def _stored(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
 def test_parallel_rank_memoizes_persisted_input(spark):
-    """Repeated parallel_rank calls on the same input plan must reuse ONE
-    persisted DataFrame (keyed on session + analyzed plan + keys), not
-    leak a fresh cached copy per invocation — corpus sweeps and bench
-    best-of-3 call win-percent / agg-gini-concentration dozens of times
-    per session."""
-    from dbtwiz_spark.ops.common import _RANK_CACHE, parallel_rank
+    """Repeated parallel_rank calls under the same (sf_dir, kind) must
+    reuse ONE cached artifact, not leak a fresh cached copy per
+    invocation — corpus sweeps and bench best-of-3 call win-percent /
+    agg-gini-concentration dozens of times per session."""
+    from dbtwiz_spark.ops.common import _ARTIFACT_CACHE, parallel_rank
 
     df = spark.range(100).withColumn("k", F.col("id") % 7)
     keys = [F.col("k"), F.col("id")]
-    before = len(_RANK_CACHE)
-    r1 = parallel_rank(df, keys)
+    before = len(_ARTIFACT_CACHE)
+    r1 = parallel_rank(df, keys, "memo-rank", "rank")
     assert r1.count() == 100
-    n_after_first = len(_RANK_CACHE)
-    # round-16: TWO memo slots per unique input — the boundary-pinning
-    # range-partitioned stage ("local") and the full ranked output
-    # ("out") so consumer executions are one cached scan
-    assert n_after_first == before + 2
+    # one entry per rank input: the ranked output only
+    assert len(_ARTIFACT_CACHE) == before + 1
     r2 = parallel_rank(
         spark.range(100).withColumn("k", F.col("id") % 7),
         [F.col("k"), F.col("id")],
+        "memo-rank",
+        "rank",
     )
-    assert len(_RANK_CACHE) == n_after_first, "second call must hit the memo"
-    # ranks are a unique total order 1..n either way
+    assert r2 is r1, "second call must hit the cache"
+    assert len(_ARTIFACT_CACHE) == before + 1
+    # ranks are a unique total order 1..n
     got = sorted(row._rank for row in r2.collect())
     assert got == list(range(1, 101))
 
 
 def test_parallel_rank_memo_separates_scale_dirs(spark, tmp_path):
-    """Plan canonicalization erases file-source paths, so two scale dirs
-    running the same query must NOT share a memo slot — a cross-scale
-    sweep would otherwise serve the wrong scale's cached ranks (caught
-    live: an sf0.1 run leaked 1462 rows into the sf0.01 oracle sweep)."""
-    from dbtwiz_spark.ops.common import _plan_sig, parallel_rank
+    """Two scale dirs running the same call site must NOT share a cache
+    entry — a cross-scale sweep would otherwise serve the wrong scale's
+    cached ranks (caught live: an sf0.1 run leaked 1462 rows into the
+    sf0.01 oracle sweep). Different kinds under one dir stay separate
+    too."""
+    from dbtwiz_spark.ops.common import parallel_rank
 
+    dirs = []
     for i, n in enumerate((7, 19)):
-        spark.range(n).write.mode("overwrite").parquet(str(tmp_path / f"d{i}"))
-    a = spark.read.parquet(str(tmp_path / "d0"))
-    b = spark.read.parquet(str(tmp_path / "d1"))
+        d = tmp_path / f"sf{i}"
+        spark.range(n).write.mode("overwrite").parquet(str(d / "orders.parquet"))
+        dirs.append(str(d))
     keys = [F.col("id")]
-    assert _plan_sig(a, keys, 8) != _plan_sig(b, keys, 8)
-    assert parallel_rank(a, keys).count() == 7
-    assert parallel_rank(b, keys).count() == 19
+    a = spark.read.parquet(dirs[0] + "/orders.parquet")
+    b = spark.read.parquet(dirs[1] + "/orders.parquet")
+    assert parallel_rank(a, keys, dirs[0], "rank").count() == 7
+    assert parallel_rank(b, keys, dirs[1], "rank").count() == 19
+    assert parallel_rank(a.limit(3), keys, dirs[0], "rank-top3").count() == 3
+    assert parallel_rank(a, keys, dirs[0], "rank").count() == 7
+    assert _cache_keys(dirs[0]) == {"rank", "rank-top3"}
+    assert _cache_keys(dirs[1]) == {"rank"}
 
 
-def test_plan_sig_changes_on_in_place_file_overwrite(spark, tmp_path):
-    """Round-12 hardening (deferred since r9): a backing file OVERWRITTEN
-    IN PLACE — same uri, new rows, the standard re-run-writer rewrite —
-    keeps the uri set identical, so a uri-only memo key would keep
-    serving the superseded artifact for the session lifetime. The key
-    folds in (size, mtime_ns) per file; end-to-end, parallel_rank must
-    serve the NEW rows after the rewrite, not the memoized old ranks."""
+def test_parallel_rank_rebuilds_after_in_place_overwrite(spark, tmp_path):
+    """A base-table file OVERWRITTEN IN PLACE — same path, new rows, the
+    standard re-run-writer rewrite — must not keep serving the
+    superseded artifact for the session lifetime: the cache compares
+    each table's (size, mtime_ns) generation on every lookup, so
+    parallel_rank serves the NEW rows after the rewrite."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dbtwiz_spark.ops.common import _plan_sig, parallel_rank
+    from dbtwiz_spark.ops.common import parallel_rank
 
-    path = str(tmp_path / "fixed-name.parquet")
+    sf_dir = str(tmp_path)
+    path = str(tmp_path / "orders.parquet")
     pq.write_table(pa.table({"id": list(range(5))}), path)
     keys = [F.col("id")]
-    df1 = spark.read.parquet(path)
-    base1, stats1 = _plan_sig(df1, keys, 8)
-    assert parallel_rank(df1, keys).count() == 5
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    first = parallel_rank(spark.read.parquet(path), keys, sf_dir, "rank")
+    assert first.count() == 5
+    (first_rdd,) = set(jsc.getPersistentRDDs().keys()) - before
     # rewrite IN PLACE: same filename, different contents
     pq.write_table(pa.table({"id": list(range(9))}), path)
-    df2 = spark.read.parquet(path)
-    base2, stats2 = _plan_sig(df2, keys, 8)
-    # same base (identical uri set and canonical plan) — this is exactly
-    # the collision a uri-only key can't see; the stats must separate it
-    assert base1 == base2
-    assert stats1 != stats2
-    got = parallel_rank(df2, keys)
+    got = parallel_rank(spark.read.parquet(path), keys, sf_dir, "rank")
     assert got.count() == 9
     assert sorted(r._rank for r in got.collect()) == list(range(1, 10))
+    # the superseded generation's storage is released, not shadowed
+    (got_rdd,) = set(jsc.getPersistentRDDs().keys()) - before
+    assert got_rdd != first_rdd
 
 
-def test_plan_sig_stats_survive_percent_encoded_paths(spark, tmp_path):
-    """Spark's inputFiles() percent-encodes spaces and specials in file
-    URIs; un-decoded, os.stat fails and every such file degrades to the
-    (None, None) unstattable mode — two GENERATIONS of a
-    space-in-the-name parquet then compare equal, silently reopening
-    the in-place-overwrite hole the r12 hardening closed (round-12
-    ADVICE). The stats must be real for such paths, and an in-place
-    rewrite must flip them."""
+def test_cached_artifact_generation_survives_special_paths(spark, tmp_path):
+    """An sf_dir whose path holds a space or '%' must still stat to a
+    real generation — a stat failure degrades to (None, None), and two
+    generations of an unstattable file compare EQUAL, which would
+    reopen the in-place-overwrite hole for exactly those paths."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dbtwiz_spark.ops.common import _plan_sig
+    from dbtwiz_spark.ops.common import _generation, cached_artifact
 
-    d = tmp_path / "scale dir 0.01"
+    d = tmp_path / "scale dir 0.01 %20"
     d.mkdir()
-    path = str(d / "part one.parquet")
+    sf_dir = str(d)
+    path = str(d / "orders.parquet")
     pq.write_table(pa.table({"id": list(range(5))}), path)
-    keys = [F.col("id")]
-    df1 = spark.read.parquet(path)
-    assert any("%20" in u for u in df1.inputFiles()), (
-        "fixture no longer exercises percent-encoding"
+    gen1 = _generation(sf_dir)
+    assert (None, None) != gen1[list(TABLES).index("orders")]
+    first = cached_artifact(
+        spark, sf_dir, "ids", lambda: spark.read.parquet(path).persist()
     )
-    base1, stats1 = _plan_sig(df1, keys, 8)
-    assert all(s != (None, None) for s in stats1), (
-        f"percent-encoded uri stat-failed: {stats1}"
-    )
+    assert first.count() == 5
     pq.write_table(pa.table({"id": list(range(9))}), path)
-    base2, stats2 = _plan_sig(spark.read.parquet(path), keys, 8)
-    assert base1 == base2 and stats1 != stats2
+    assert _generation(sf_dir) != gen1
+    got = cached_artifact(
+        spark, sf_dir, "ids", lambda: spark.read.parquet(path).persist()
+    )
+    assert got is not first and got.count() == 9
 
 
 def test_parallel_rank_memo_separates_persisted_inputs(spark, tmp_path):
-    """A parallel_rank whose INPUT contains a persisted subtree: the
-    InMemoryRelation swallows the file scan and canonicalizes
-    scale-independently, so two scale dirs' chained-rank plans collide
-    on the canonical JSON alone (caught live: an sf0.01 RFM sweep
-    served sf0.001's 150-row rank table). The signature must recover
-    the file provenance from the cached build subtree — separating
-    scales while staying STABLE for the same plan (a primed Catalog
-    puts an InMemoryRelation under every bench plan, so refusing
-    memoization wholesale re-leaked a persisted copy per call and cost
-    5x on win-rolling-corr)."""
-    from dbtwiz_spark.ops.common import _plan_sig
+    """A rank input built on persisted data (a primed Catalog puts an
+    InMemoryRelation under every bench plan) is keyed like any other:
+    two scale dirs stay separate and a repeat call under one (sf_dir,
+    kind) hits the cache instead of re-persisting a copy per call (which
+    cost 5x on win-rolling-corr when a plan-derived key refused to
+    memoize such inputs)."""
+    from dbtwiz_spark.ops.common import parallel_rank
 
-    for i, n in enumerate((7, 19)):
-        spark.range(n).write.mode("overwrite").parquet(str(tmp_path / f"d{i}"))
+    dirs = [str(tmp_path / "p0"), str(tmp_path / "p1")]
     keys = [F.col("id")]
-    a = spark.read.parquet(str(tmp_path / "d0")).persist()
-    b = spark.read.parquet(str(tmp_path / "d1")).persist()
+    a = spark.range(7).persist()
+    b = spark.range(19).persist()
+
+    def shifted(df):
+        return df.select((F.col("id") + 1).alias("id"))
+
     try:
         a.count(), b.count()  # materialize the InMemoryRelations
-        da = a.select((F.col("id") + 1).alias("id"))
-        db = b.select((F.col("id") + 1).alias("id"))
-        # without the provenance recovery these two sigs are EQUAL (no
-        # files, canonical InMemoryRelation) — they must separate
-        assert _plan_sig(da, keys, 8) != _plan_sig(db, keys, 8)
-        # and the SAME plan must hit the same slot (memo reuse under a
-        # primed catalog / persisted artifacts)
-        assert _plan_sig(da, keys, 8) == _plan_sig(da, keys, 8)
+        ra = parallel_rank(shifted(a), keys, dirs[0], "r")
+        rb = parallel_rank(shifted(b), keys, dirs[1], "r")
+        assert (ra.count(), rb.count()) == (7, 19)
+        assert parallel_rank(shifted(a), keys, dirs[0], "r") is ra
     finally:
         a.unpersist(), b.unpersist()
 
 
-def test_plan_sig_refuses_memo_without_file_provenance(spark):
-    """A cached plan with NO recoverable file provenance (persisted
-    local data — nothing in the cached build subtree names a source)
-    cannot be distinguished from another same-schema cached input, so
-    it must fall back to a never-matching token: correctness over
-    reuse."""
-    from dbtwiz_spark.ops.common import _plan_sig
-
-    a = spark.createDataFrame([(i,) for i in range(7)], "id long").persist()
-    try:
-        a.count()
-        da = a.select((F.col("id") + 1).alias("id"))
-        if "InMemoryRelation" not in (
-            da._jdf.queryExecution().optimizedPlan().toString()
-        ):  # pragma: no cover - plan shape drifted; guard is moot then
-            return
-        assert _plan_sig(da, [F.col("id")], 8) != _plan_sig(
-            da, [F.col("id")], 8
-        )
-    finally:
-        a.unpersist()
-
-
 def test_rank_local_stage_released_after_output_artifact(spark):
     """Round-17 storage fix (r16 verdict §5 watch): the rank/prefix
-    device used to hold TWO corpus-sized persisted artifacts per input —
-    the range-partitioned local stage and the full output — doubling
-    every consumer's steady-state executor storage. The local stage is
-    only needed to pin one boundary sample while the output is built;
-    after the output artifact is materialized, local's storage must be
-    released while the output stays cached (and ranks stay correct)."""
-    from dbtwiz_spark.ops.common import (
-        _RANK_CACHE,
-        clear_session_memos,
-        parallel_rank,
-    )
+    device must hold ONE persisted artifact per input, not two. The
+    range-partitioned local stage is only needed to pin one boundary
+    sample while the output is built; after the build only the output
+    stays cached (and ranks stay correct)."""
+    from dbtwiz_spark.ops.common import clear_session_memos, parallel_rank
 
     clear_session_memos()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
     df = spark.range(100).selectExpr("id", "id % 7 AS k")
-    ranked = parallel_rank(df, [F.col("k"), F.col("id")])
+    ranked = parallel_rank(df, [F.col("k"), F.col("id")], "memo-local", "rank")
     rows = ranked.select("_rank").collect()
     assert sorted(r["_rank"] for r in rows) == list(range(1, 101))
-    local_dfs = [v[1] for k, v in _RANK_CACHE.items() if k[1] == "local"]
-    out_dfs = [v[1] for k, v in _RANK_CACHE.items() if k[1] == "out"]
-    assert local_dfs and out_dfs
-    for d in local_dfs:
-        assert not (d.storageLevel.useMemory or d.storageLevel.useDisk)
-    for d in out_dfs:
-        assert d.storageLevel.useMemory or d.storageLevel.useDisk
+    assert _stored(ranked)
+    new = set(jsc.getPersistentRDDs().keys()) - before
+    assert len(new) == 1, f"expected only the output cached, got {len(new)}"
     clear_session_memos()
-
-
-def test_plan_sig_mixed_file_and_opaque_leaf_falls_through(spark, tmp_path):
-    """Round-16 ADVICE: the analyzed-leaves fast path returned early when
-    ANY leaf yielded file URIs, silently dropping leaves whose provenance
-    recovery failed for a reason other than being self-describing
-    (LogicalRDD from localCheckpoint, InMemoryRelation-rooted inputs) —
-    a signature missing that leaf loses the node-name-sequence
-    disambiguation and two such plans can collide (the round-9 failure
-    mode). A plan mixing a primed file leaf with a LogicalRDD leaf must
-    fall through to the optimized-plan string recovery, whose files
-    component carries the node-name sequence."""
-    from dbtwiz_spark.ops.common import _plan_sig
-
-    p = str(tmp_path / "t.parquet")
-    spark.range(10).selectExpr("id", "id % 3 AS k").write.parquet(p)
-    base = spark.read.parquet(p).persist()
-    try:
-        base.count()  # primed: cache substitution empties inputFiles()
-        ck = spark.range(5).selectExpr("id AS k2").localCheckpoint()
-        df = base.join(ck, base.id == ck.k2)
-        if df.inputFiles():  # pragma: no cover - priming shape drifted
-            return
-        (sig_base, _stats) = _plan_sig(df, ["id"])
-        files = sig_base[2]
-        # fallback shape: (uris, node-name sequence), not a bare uri tuple
-        assert isinstance(files, tuple) and len(files) == 2
-        uris, nodes = files
-        assert any(u.startswith("file:") for u in uris)
-        assert any("LogicalRDD" in n for n in nodes)
-    finally:
-        base.unpersist()
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_clear_session_memos_evicts_every_registered_store(spark):
     """The eviction hook (round-8 ADVICE / VERDICT r7 item 5): one call
-    unpersists and drops everything in every enrolled memo store — rank
-    tables, graph edge artifacts, ANN indexes, pipeline derived tables —
-    so a long-lived session sweeping many scales is bounded by one
-    sweep's working set, not session lifetime."""
+    unpersists and drops every cached artifact — rank tables, graph edge
+    artifacts, ANN indexes, pipeline derived tables — so a long-lived
+    session sweeping many scales is bounded by one sweep's working set,
+    not session lifetime. Catalog.clear_memos() returns the count."""
     from dbtwiz_spark.catalog import Catalog
-    from dbtwiz_spark.ops import ext_llm, ext_pipeline, graphs
     from dbtwiz_spark.ops.common import (
-        _RANK_CACHE,
+        _ARTIFACT_CACHE,
+        cached_artifact,
         clear_session_memos,
         parallel_rank,
     )
 
+    clear_session_memos()
     df = spark.range(50).withColumn("k", F.col("id") % 3)
-    ranked = parallel_rank(df, [F.col("k"), F.col("id")])
+    ranked = parallel_rank(df, [F.col("k"), F.col("id")], "memo-test", "rank")
     assert ranked.count() == 50
-    built = graphs._artifact(
-        spark, "memo-test", "edges", lambda: spark.range(5).withColumn("d", F.lit(1))
-    )
+
+    def build_edges():
+        return spark.range(5).withColumn("d", F.lit(1)).persist()
+
+    built = cached_artifact(spark, "memo-test", "edges", build_edges)
     assert built.count() == 5
-    piped = ext_pipeline._pipe_artifact(
-        spark, "memo-test", "st", lambda: spark.range(7)
+    piped = cached_artifact(
+        spark, "memo-test", "st", lambda: spark.range(7).persist()
     )
     assert piped.count() == 7
-    ext_llm._ARTIFACTS[(spark, "memo-test", "sig")] = spark.range(3).persist()
-    assert len(_RANK_CACHE) >= 1
-    assert built.storageLevel.useMemory or built.storageLevel.useDisk
+    assert _stored(built) and _stored(ranked)
 
-    dropped = clear_session_memos()
-    assert dropped >= 4
-    assert not _RANK_CACHE
-    assert not graphs._ARTIFACTS
-    assert not ext_pipeline._ARTIFACTS
-    assert not ext_llm._ARTIFACTS
-    assert not (built.storageLevel.useMemory or built.storageLevel.useDisk)
+    assert clear_session_memos() == 3
+    assert not _ARTIFACT_CACHE
+    assert not (_stored(built) or _stored(piped) or _stored(ranked))
     # next call transparently rebuilds
-    rebuilt = graphs._artifact(
-        spark, "memo-test", "edges", lambda: spark.range(5).withColumn("d", F.lit(1))
-    )
-    assert rebuilt.count() == 5
+    rebuilt = cached_artifact(spark, "memo-test", "edges", build_edges)
+    assert rebuilt is not built and rebuilt.count() == 5
     # Catalog surface returns the drop count too
-    assert Catalog.clear_memos() >= 1
-    assert not graphs._ARTIFACTS
+    assert Catalog.clear_memos() == 1
+    assert not _ARTIFACT_CACHE
 
 
 def test_clear_session_memos_unpersists_every_tuple_element(spark):
@@ -947,46 +889,103 @@ def test_clear_session_memos_unpersists_every_tuple_element(spark):
     cents_row) 3-tuple; eviction that unpersists only the LAST element
     leaks the corpus-sized assignments and the centroid table per sweep
     — the exact cross-sweep accumulation the hook exists to prevent.
-    Every tuple element with an unpersist method must be freed."""
-    from dbtwiz_spark.ops import ext_llm
-    from dbtwiz_spark.ops.common import clear_session_memos
+    Every tuple element must be freed."""
+    from dbtwiz_spark.ops.common import (
+        _ARTIFACT_CACHE,
+        cached_artifact,
+        clear_session_memos,
+    )
 
     a = spark.range(11).persist()
     b = spark.range(12).persist()
     c = spark.range(13).persist()
     for df in (a, b, c):
         df.count()  # materialize so storageLevel reflects a real cache
-    ext_llm._ARTIFACTS[(spark, "memo-tuple-test", "ivf")] = (a, b, c)
+    cached_artifact(spark, "memo-tuple-test", "ivf", lambda: (a, b, c))
     clear_session_memos()
     for df in (a, b, c):
-        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    assert not ext_llm._ARTIFACTS
+        assert not _stored(df)
+    assert not _ARTIFACT_CACHE
 
 
-def test_register_memo_store_enrolls_by_identity(spark):
-    """Two EMPTY dicts compare ==; enrollment must be identity-based or
-    the second module's store is silently skipped and never evicted."""
-    from dbtwiz_spark.ops.common import (
-        _MEMO_STORES,
-        clear_session_memos,
-        register_memo_store,
-    )
+def test_graph_artifact_rebuilt_after_in_place_overwrite(spark, tmp_path):
+    """Graph, pipeline and LLM artifacts carry the same in-place-overwrite
+    protection as ranks: after orders.parquet is rewritten in place, the
+    pagerank edge list is rebuilt from the new rows instead of serving
+    the superseded generation's edges."""
+    import shutil
 
-    a: dict = {}
-    b: dict = {}
-    register_memo_store(a)
-    register_memo_store(b)
-    register_memo_store(a)  # idempotent
-    try:
-        assert sum(1 for s in _MEMO_STORES if s is a) == 1
-        assert sum(1 for s in _MEMO_STORES if s is b) == 1
-        a["x"] = spark.range(2).persist()
-        b["y"] = spark.range(2).persist()
-        assert clear_session_memos() >= 2
-        assert not a and not b
-    finally:
-        _MEMO_STORES.remove(a)
-        _MEMO_STORES.remove(b)
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dbtwiz_spark.catalog import Catalog
+    from dbtwiz_spark.ops import graphs as G
+
+    sf_dir = str(tmp_path / "sf copy")
+    (tmp_path / "sf copy").mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{SF_DIR}/{t}.parquet", f"{sf_dir}/{t}.parquet")
+
+    def expected_edges():
+        con = duckdb.connect()
+        (n,) = con.execute(
+            "SELECT 2 * COUNT(*) FROM (SELECT DISTINCT o.o_custkey, "
+            f"l.l_suppkey FROM '{sf_dir}/orders.parquet' o JOIN "
+            f"'{sf_dir}/lineitem.parquet' l ON o.o_orderkey = l.l_orderkey)"
+        ).fetchone()
+        return n
+
+    first = G._pr_edges(spark, sf_dir, Catalog(spark, sf_dir))
+    n_first = first.count()
+    assert n_first == expected_edges()
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
+    half = orders.filter(pc.equal(pc.bit_wise_and(orders["o_orderkey"], 1), 0))
+    pq.write_table(half, f"{sf_dir}/orders.parquet")
+    # a fresh Catalog: its DataFrames keep the file listing taken at load
+    again = G._pr_edges(spark, sf_dir, Catalog(spark, sf_dir))
+    assert again is not first
+    assert again.count() == expected_edges() < n_first
+
+
+def test_cached_artifact_kind_maps_to_one_builder():
+    """Explicit keys leave kind reuse as the one collision class: two
+    builders under one literal kind would serve each other's artifact.
+    Every literal kind passed to cached_artifact (or to the rank/prefix
+    device, which caches under the caller's kind) must map to exactly
+    one builder expression. cs100 and ivf16 are shared by two entries
+    each, through the same builder."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    import dbtwiz_spark.ops as ops_pkg
+
+    kind_arg = {"cached_artifact": 2, "parallel_rank": 3, "parallel_prefix_sum": 4}
+    builders = defaultdict(set)
+    sites = defaultdict(int)
+    for path in sorted(Path(ops_pkg.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+            pos = kind_arg.get(name)
+            if pos is None or len(node.args) <= pos:
+                continue
+            kind = node.args[pos]
+            if not isinstance(kind, (ast.Constant, ast.JoinedStr)):
+                continue  # the device's own pass-through of its caller's kind
+            rest = [a for i, a in enumerate(node.args) if i not in (0, 1, pos)]
+            if name != "cached_artifact":
+                rest = [node.args[0], node.args[1]] + rest
+            builder = name + "(" + ", ".join(ast.unparse(a) for a in rest) + ")"
+            builders[ast.unparse(kind)].add(builder)
+            sites[ast.unparse(kind)] += 1
+    assert sum(sites.values()) >= 35, "guard no longer sees the call sites"
+    collisions = {k: sorted(b) for k, b in builders.items() if len(b) > 1}
+    assert not collisions, f"one kind, several builders: {collisions}"
+    assert sites["'cs100'"] == 2 and sites["'ivf16'"] == 2
 
 
 def test_rank_output_correct_after_memo_eviction(spark):
@@ -1004,7 +1003,9 @@ def test_rank_output_correct_after_memo_eviction(spark):
         df = spark.range(50_000).withColumn(
             "k", (F.col("id") * 2654435761 + trial) % 999983
         )
-        ranked = parallel_rank(df, [F.col("k"), F.col("id")], n_parts=8)
+        ranked = parallel_rank(
+            df, [F.col("k"), F.col("id")], "memo-evict", f"rank{trial}", n_parts=8
+        )
         clear_session_memos()  # evict BEFORE the first execution
         got = ranked.agg(
             F.count("*").alias("n"),

@@ -854,7 +854,7 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark):
     import inspect
 
     from dbtwiz_spark.ops import graphs as G
-    from dbtwiz_spark.ops.common import views
+    from dbtwiz_spark.ops.common import _ARTIFACT_CACHE, views
     from dbtwiz_spark.ops.registry import CORPUS
 
     for fn in (G.graph_bfs_hops, G.graph_minplus_distance):
@@ -866,7 +866,7 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark):
     mp = CORPUS["graph-minplus-distance"].fn(spark, SF_DIR)
     G._pr_edges(spark, SF_DIR, views(spark, SF_DIR))
     for kind in ("bfs_edges", "minplus_edges", "pr_edges"):
-        eplan = _formatted(G._ARTIFACTS[(spark, SF_DIR, kind)])
+        eplan = _formatted(_ARTIFACT_CACHE[(spark, SF_DIR, kind)][1])
         assert "Join" not in eplan, f"{kind} re-embeds the pair join"
         assert "Union" in eplan, f"{kind} lost the mirror union"
 
@@ -874,10 +874,10 @@ def test_round11_bfs_minplus_truncated_and_pairs_first(spark):
         plan = _formatted(df)
         assert "Join" not in plan, f"{name} plan re-embeds the hop joins"
 
-    dist_obj = G._ARTIFACTS[(spark, SF_DIR, "minplus_dist")]
+    dist_obj = _ARTIFACT_CACHE[(spark, SF_DIR, "minplus_dist")][1]
     rows1 = {tuple(r) for r in mp.collect()}
     mp2 = CORPUS["graph-minplus-distance"].fn(spark, SF_DIR)
-    assert G._ARTIFACTS[(spark, SF_DIR, "minplus_dist")] is dist_obj, (
+    assert _ARTIFACT_CACHE[(spark, SF_DIR, "minplus_dist")][1] is dist_obj, (
         "second call must hit the converged-distance memo"
     )
     assert {tuple(r) for r in mp2.collect()} == rows1

@@ -18,7 +18,7 @@ from dbtwiz_spark.streaming import (
     stateful_dedup_stream,
     windowed_counts_stream,
 )
-from dbtwiz_spark.streaming.jobs import windowed_topk_stream
+from dbtwiz_spark.streaming.jobs import foreach_batch_near_dedup, windowed_topk_stream
 from tests.conftest import SF_DIR
 
 
@@ -919,6 +919,17 @@ _ONCE_CASES = {
         [(_T0, "click", 3), (_T0, "view", 2), (_T1, "click", 1)],
         "win_start TIMESTAMP, event_type STRING, n_events BIGINT",
         "n_events",
+    ),
+    "near_dedup": (
+        lambda spark, wh: foreach_batch_near_dedup(wh, "sigs", "flags"),
+        ["sigs", "flags"],
+        [
+            (1, "alpha beta gamma delta epsilon"),
+            (2, "alpha beta gamma delta epsilon"),
+            (3, "one two three four five"),
+        ],
+        "doc_id BIGINT, text STRING",
+        "doc_id",
     ),
 }
 
